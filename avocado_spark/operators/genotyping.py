@@ -270,6 +270,9 @@ def classify_observations(
 # the event emitter; above this row count it stops (same driver-memory
 # contract as the broadcast join it feeds).
 SITE_PUSHDOWN_MAX_VARIANTS = 3_000_000
+VARIANT_DIM_SCHEMA = (
+    "contig string, start long, end long, ref_allele string, alt_allele string"
+)
 
 
 def observe_variants(
@@ -296,15 +299,22 @@ def observe_variants(
         rows = variants.select(cols).limit(SITE_PUSHDOWN_MAX_VARIANTS + 1).collect()
         if len(rows) <= SITE_PUSHDOWN_MAX_VARIANTS:
             # rebuild the dim from the collected rows so discovery runs
-            # once (the collect already paid for it), and classify joins
-            # against a local relation Spark auto-broadcasts
+            # once (the collect already paid for it). Built from pandas
+            # under the session's Arrow setting it is a LocalRelation
+            # (a JVM-side Arrow scan above arrow.localRelationThreshold):
+            # no Python task scans it and repeated scans reuse one
+            # broadcast. A list of Rows would become a Python RDD.
             sites: dict[str, set[int]] = {}
             for r in rows:
                 sites.setdefault(r["contig"], set()).add(int(r["start"]))
             keep = {c: frozenset(s) for c, s in sites.items()}
-            variants = reads.sparkSession.createDataFrame(rows, schema="""
-                contig string, start long, end long,
-                ref_allele string, alt_allele string""")
+            variants = reads.sparkSession.createDataFrame(
+                pd.DataFrame(rows, columns=cols), schema=VARIANT_DIM_SCHEMA
+            )
+            if not rows:
+                # pyspark sends an empty pandas frame down the Row path;
+                # the optimizer turns limit(0) into an empty LocalRelation
+                variants = variants.limit(0)
         else:
             strategy = "binned"  # over the driver cap: shuffle, don't broadcast
     return classify_observations(read_site_events(reads, keep), variants, strategy=strategy)

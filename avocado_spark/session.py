@@ -12,6 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the avocado_spark package: Python workers import
+# the engine's UDFs, and the worker daemon, from it
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def get_spark(
     app_name: str = "avocado_spark",
@@ -27,6 +32,9 @@ def get_spark(
       - UTC session TZ: deterministic timestamp semantics vs oracles.
       - shuffle partitions ~ cores locally; on a real cluster leave the
         override to the submitter (AQE coalesces down from a high count).
+      - Python workers fork from ``avocado_spark.worker_daemon`` (see its
+        docstring), and the package root is on their PYTHONPATH, so they
+        import the engine whatever the caller's cwd or PYTHONPATH.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -52,13 +60,21 @@ def get_spark(
         # local mode: all "executors" share the driver JVM; bound the
         # result size so a runaway collect fails fast instead of OOMing.
         .config("spark.driver.maxResultSize", "8g")
+        .config("spark.python.daemon.module", "avocado_spark.worker_daemon")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    conf[WORKER_PYTHONPATH] = _with_package_root(conf.get(WORKER_PYTHONPATH))
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _with_package_root(pythonpath: str | None) -> str:
+    """``pythonpath`` with the package root appended unless already on it."""
+    paths = [p for p in (pythonpath or "").split(os.pathsep) if p]
+    return os.pathsep.join(paths if PACKAGE_ROOT in paths else paths + [PACKAGE_ROOT])
 
 
 def set_job_attribution(spark: SparkSession, name: str, phase: str | None = None) -> None:

@@ -681,7 +681,8 @@ def record_floor() -> int:
         "runs_per_query": max(runs, 1),
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
         "protocol": ("idle host, 1 warm pass + best-of-N interleaved, "
-                     "clearCache between queries, normalized plan "
+                     "clearCache + best-effort JVM System.gc() between "
+                     "queries, normalized plan "
                      "fingerprints for future plan-vs-host diffing"),
         "queries": floor,
     }

@@ -115,3 +115,32 @@ def test_attach_ploidy_empty_cnv_and_empty_obs(spark):
     # not raise on the null extremes
     sites = G.genotype_sites(spark, out)
     assert sites.count() == 0
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_observe_variants_dim_is_a_local_relation(spark):
+    """The collected variant dim goes back to Spark as a LocalRelation,
+    not a Python RDD: no Python task scans it, and a silent fallback
+    from the Arrow path would show here as a LogicalRDD."""
+    from avocado_spark.operators.discovery import discover_variants
+
+    reads = _reads(spark)
+    variants = discover_variants(reads, phred_threshold=18, min_observations=2)
+    obs = G.observe_variants(reads, variants, strategy="broadcast")
+    plan = _optimized(obs)
+    assert "LocalRelation" in plan, plan
+    assert "LogicalRDD" not in plan, plan
+    assert obs.count() > 0
+
+
+def test_observe_variants_zero_variants(spark):
+    reads = _reads(spark)
+    none = spark.createDataFrame([], G.VARIANT_DIM_SCHEMA)
+    obs = G.observe_variants(reads, none, strategy="broadcast")
+    plan = _optimized(obs)
+    assert "LocalRelation" in plan, plan
+    assert "LogicalRDD" not in plan, plan
+    assert obs.count() == 0
