@@ -15,13 +15,12 @@ millions) never materializes its neighborhood as an array; the
 per-round state is an edge set, linear in the input pairs. Lineage is
 truncated per round with ``localCheckpoint`` (on a real cluster with a
 checkpoint dir, reliable ``checkpoint`` — same call shape), and each
-round's blocks are RELEASED as soon as the next round materializes
-(driver GC does not reliably reach checkpoint blocks across py4j, so
-without explicit release a long session pins one edge table per round
-per query). Residual footprint per call is only what the returned
-DataFrame still reads: the final star forest + node list for CC, the
-final rank/live table for pagerank/k-core — each far smaller than the
-input corpus. Convergence is detected with one tiny aggregate action
+round's blocks are unpinned as soon as the next round materializes
+(see :mod:`avocado_spark.checkpoints`). What stays pinned per call is
+only what the returned DataFrame still reads: the final star forest +
+node list for CC, the final rank/live table for pagerank/k-core — each
+far smaller than the input corpus — until the caller releases its job
+group. Convergence is detected with one tiny aggregate action
 per round (count + order-free hash signature of the edge set).
 """
 
@@ -30,72 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from avocado_spark.checkpoints import checkpoint, unpin
 from avocado_spark.session import set_phase as _set_phase
-
-
-def _persistent_rdd_ids(df: DataFrame) -> set[int]:
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _tracked_checkpoint(
-    df: DataFrame, owned: set[int], eager: bool = True
-) -> DataFrame:
-    """Eager ``localCheckpoint`` that RECORDS the RDD id it pinned, so
-    iterative callers can release each round's blocks once the next
-    round is materialized. Driver-side GC does not reliably reach
-    RDD-level checkpoint blocks through the py4j boundary (observed:
-    blocks live for the session), so iterative operators must free
-    superseded rounds explicitly or a long session accumulates one edge
-    table per round per query.
-
-    Ownership is captured DIRECTLY from the returned Dataset's plan
-    (``localCheckpoint`` returns a ``LogicalRDD`` over exactly the RDD
-    it persisted), not by diffing the session-global persistent-RDD
-    set — so two queries running concurrently in one SparkSession can
-    never claim (and then unpersist) each other's checkpoint blocks.
-    A set-diff fallback covers Spark builds where the plan shape
-    differs; it is only reachable if the direct capture fails.
-
-    ``eager=False`` defers materialization to the caller's FIRST action
-    over the returned DataFrame (r13): when that action reads every
-    partition anyway (e.g. a partition-weight rollup), the separate
-    materialization job is pure overhead — one sequential driver job
-    saved, same pinned blocks, same release discipline."""
-    before = _persistent_rdd_ids(df)
-    out = df.localCheckpoint(eager=eager)
-    try:
-        owned.add(int(out._jdf.queryExecution().analyzed().rdd().id()))
-    except Exception:  # pragma: no cover — non-LogicalRDD plan shape
-        owned.update(_persistent_rdd_ids(out) - before)
-    return out
-
-
-def _release_rdds(df: DataFrame, ids: set[int]) -> None:
-    """Unpersist checkpoint blocks by id. Only call on rounds that are
-    SUPERSEDED (a later eager checkpoint no longer reads them) — a
-    localCheckpoint's lineage is cut, so releasing blocks still in use
-    would fail the consumer, not recompute."""
-    sc = df.sparkSession.sparkContext._jsc.sc()
-    for i in ids:
-        sc.unpersistRDD(i, False)
-    ids.clear()
-
-
-def release_result(spark, residual_rdd_ids: set[int]) -> None:
-    """Free the checkpoint blocks a graph operator's RESULT still
-    reads, once the caller has fully consumed it (collected / written
-    out). Every iterative operator here releases superseded rounds
-    itself, but the final round's blocks necessarily outlive the call
-    — a long analytics session running many graph queries should call
-    this with the ``residual_rdd_ids`` each operator reports in its
-    ``stats`` dict, or those final tables accumulate for the session
-    lifetime. After this call the result DataFrame is DEAD (lineage was
-    cut at the checkpoint): re-consuming it raises, not recomputes."""
-    sc = spark.sparkContext._jsc.sc()
-    for i in set(residual_rdd_ids):
-        sc.unpersistRDD(i, False)
-    residual_rdd_ids.clear()
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -174,36 +109,29 @@ def connected_components(
     Raises if the star rounds have not converged after ``max_iter``
     (2·max_iter ≈ log²-of-astronomical — hitting it means bad input,
     e.g. non-numeric ids hashing oddly, not a bigger graph)."""
-    prev_ids: set[int] = set()
-    e = _tracked_checkpoint(
+    e = checkpoint(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct(),
-        prev_ids,
+        .distinct()
     )
     # nodes stays pinned until the caller consumes the result (the root
-    # rows read it); with the per-round release below, the steady-state
+    # rows read it); with the per-round unpin below, the steady-state
     # footprint is 2 edge tables (current round + nodes), not one per
-    # round per call. Tracked so the residual is reported (and
-    # releasable via release_result) once the caller is done.
-    residual: set[int] = set()
-    nodes = _tracked_checkpoint(
+    # round per call.
+    nodes = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
-        .distinct(),
-        residual,
+        .distinct()
     )
 
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
         _set_phase(e, f"avocado:connected_components:round {rounds}")
-        cur_ids: set[int] = set()
-        e = _tracked_checkpoint(_small_star(_large_star(e)), cur_ids)
+        prev, e = e, checkpoint(_small_star(_large_star(e)))
         # the new round is materialized with lineage cut — the previous
         # round's blocks are now unreachable by any consumer; free them
-        _release_rdds(e, prev_ids)
-        prev_ids = cur_ids
+        unpin(prev)
         # structural convergence, checked EVERY round: a star-forest
         # state after _small_star is provably the fixed point (see
         # _is_star_forest), so this terminates one full round earlier
@@ -215,10 +143,6 @@ def connected_components(
         raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
     if stats is not None:  # telemetry: scale-growth diagnosis (r6 #6)
         stats["rounds"] = rounds
-        # the blocks the RESULT still reads (final star forest + node
-        # list) — pass to release_result after consuming (r7 advice)
-        residual.update(prev_ids)
-        stats["residual_rdd_ids"] = residual
 
     # converged edge set is a star forest: (member → root). Roots have
     # no outgoing edge — they are their own component.
@@ -285,19 +209,17 @@ def triangle_counts(
     orientation bounds every out-list at O(sqrt(m)).
     """
     # edges is read three times (degree agg, orientation join, wedge
-    # closure): one eager tracked checkpoint, RELEASED after the final
-    # per-node counts materialize — not DataFrame.persist, which pinned
-    # it in the session CacheManager for the session lifetime (the r7
-    # leak). ``assume_materialized`` skips the checkpoint when the
+    # closure): one checkpoint, unpinned after the final per-node counts
+    # materialize. ``assume_materialized`` skips the checkpoint when the
     # CALLER already owns one (clustering_coefficients feeds the same
-    # blocks to its degree agg) — the caller then owns the release.
-    edge_ids: set[int] = set()
-    if not assume_materialized:
+    # blocks to its degree agg) — the caller then owns the unpin.
+    own_edges = not assume_materialized
+    if own_edges:
         # r13 optimization round: LAZY checkpoint — the pack-stats agg
         # below reads every edge partition anyway, so it doubles as the
         # materialization action (−1 sequential driver job; same pinned
-        # blocks, same release discipline).
-        edges = _tracked_checkpoint(edges, edge_ids, eager=False)
+        # blocks).
+        edges = checkpoint(edges, eager=False)
     # one bounded agg: row count + packed-key eligibility (see
     # _edge_pack_stats — single-BIGINT closing key when ids < 2^31)
     n_edges, packable = _edge_pack_stats(edges)
@@ -359,19 +281,15 @@ def triangle_counts(
     if materialize_result:
         # materialize the (small: nodes-in-triangles-sized) result
         # table, then free the edge blocks — the returned plan no
-        # longer reads them. Residual footprint = the counts table
-        # only, reported for release_result.
-        residual: set[int] = set()
-        counts = _tracked_checkpoint(counts, residual)
-        _release_rdds(counts, edge_ids)
-    else:
-        # lazy form (plan inspection / callers who compose further):
-        # the returned plan still reads the checkpointed edges, so the
-        # edge blocks ARE the residual — release after consuming.
-        residual = edge_ids
+        # longer reads them. Still pinned: the counts table only.
+        counts = checkpoint(counts)
+        if own_edges:
+            unpin(edges)
+    # lazy form (plan inspection / callers who compose further): the
+    # returned plan still reads the checkpointed edges, so they stay
+    # pinned until the caller releases its job group
     if stats is not None:
         stats["n_edges"] = n_edges
-        stats["residual_rdd_ids"] = residual
     return counts
 
 
@@ -397,7 +315,6 @@ def clustering_coefficients(
     edges: DataFrame,
     broadcast_max_edges: int = 5_000_000,
     top_k: int | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Local clustering coefficient per node, in exact basis points:
     c_bp = (10000·2·tri_u) div (d_u·(d_u−1)) — "how clique-like is
@@ -415,10 +332,9 @@ def clustering_coefficients(
     the operator so the materialization that releases the edge blocks
     is k rows, not node-sized (the edge_strength discipline).
     """
-    edge_ids: set[int] = set()
     # lazy checkpoint (r13): triangle_counts' internal pack-stats agg
     # is the first action over these blocks and materializes them.
-    edges = _tracked_checkpoint(edges, edge_ids, eager=False)
+    edges = checkpoint(edges, eager=False)
     tstats: dict = {}
     tri = triangle_counts(
         edges,
@@ -463,11 +379,8 @@ def clustering_coefficients(
             F.col("n_triangles").desc(),
             F.col("node").asc(),
         ).limit(top_k)
-    residual: set[int] = set()
-    out = _tracked_checkpoint(scored, residual)
-    _release_rdds(out, edge_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = residual
+    out = checkpoint(scored)
+    unpin(edges)
     return out
 
 
@@ -487,10 +400,7 @@ def transitivity(
     (= 3T), trans_bp, mean_local_c_bp (NULL on a wedge-free graph).
     """
     dec = "decimal(38,0)"
-    cstats: dict = {}
-    cc = clustering_coefficients(
-        edges, broadcast_max_edges=broadcast_max_edges, stats=cstats
-    )
+    cc = clustering_coefficients(edges, broadcast_max_edges=broadcast_max_edges)
     agg = cc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes_deg2"),
         F.coalesce(
@@ -517,9 +427,8 @@ def transitivity(
             "CAST(_sum_cbp div n_nodes_deg2 AS BIGINT) END"
         ).alias("mean_local_c_bp"),
     )
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)
-    _release_rdds(out, cstats["residual_rdd_ids"])
+    out = checkpoint(out)
+    unpin(cc)
     return out
 
 
@@ -530,7 +439,6 @@ def pagerank_exact(
     edges: DataFrame,
     n_iter: int = 5,
     damping_u: int = 850_000,
-    stats: dict | None = None,
 ) -> DataFrame:
     """PageRank over an undirected edge set in EXACT fixed-point
     arithmetic: ranks are integer micro-units, each push is
@@ -554,15 +462,11 @@ def pagerank_exact(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     # adj (edge + degree) is reused every round: one eager checkpoint,
-    # released after the final round materializes — NOT DataFrame
-    # .persist, which pins it in the session CacheManager until an
-    # explicit unpersist that no caller can sequence correctly
-    adj_ids: set[int] = set()
+    # unpinned after the final round materializes
     deg = und.groupBy("u").agg(F.count("*").alias("deg"))
-    adj = _tracked_checkpoint(und.join(deg, "u"), adj_ids)
+    adj = checkpoint(und.join(deg, "u"))
     ranks = deg.select("u", F.lit(PAGERANK_SCALE).cast("long").alias("rank_u"))
     base_u = PAGERANK_SCALE - damping_u
-    prev_ids: set[int] = set()
     for i in range(n_iter):
         _set_phase(adj, f"avocado:pagerank_exact:iter {i + 1}")
         # true integer division (`div`), NOT floor(double /): for large
@@ -577,7 +481,7 @@ def pagerank_exact(
             )
             .select("node", F.expr("_num div _den").cast("long").alias("c_u"))
         )
-        ranks = (
+        prev, ranks = ranks, checkpoint(
             contribs.groupBy("node")
             .agg(F.sum("c_u").cast("long").alias("in_u"))
             .select(
@@ -585,21 +489,14 @@ def pagerank_exact(
                 (F.lit(base_u) + F.col("in_u")).cast("long").alias("rank_u"),
             )
         )
-        cur_ids: set[int] = set()
-        ranks = _tracked_checkpoint(ranks, cur_ids)
-        _release_rdds(ranks, prev_ids)  # superseded round
-        prev_ids = cur_ids
+        unpin(prev)  # superseded round
     # all rounds are materialized — the adjacency blocks are done too;
     # only the final ranks table stays pinned until the caller consumes
-    _release_rdds(ranks, adj_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = prev_ids  # free via release_result
+    unpin(adj)
     return ranks.select(F.col("u").alias("node"), "rank_u")
 
 
-def k_core(
-    edges: DataFrame, k: int = 3, n_rounds: int = 6, stats: dict | None = None
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int = 3, n_rounds: int = 6) -> DataFrame:
     """k-core membership via ``n_rounds`` of synchronous peeling:
     each round drops every node whose degree within the surviving
     subgraph is < k, exactly like the textbook decomposition but with a
@@ -619,23 +516,17 @@ def k_core(
     und = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    prev_ids: set[int] = set()
-    live = _tracked_checkpoint(und, prev_ids)
+    live = checkpoint(und)
     for i in range(n_rounds):
         _set_phase(live, f"avocado:k_core:round {i + 1}")
         deg = live.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("u")
-        cur_ids: set[int] = set()
-        live = _tracked_checkpoint(
+        prev, live = live, checkpoint(
             live.join(keep, "u", "left_semi").join(
                 keep.withColumnRenamed("u", "v"), "v", "left_semi"
-            ),
-            cur_ids,
+            )
         )
-        _release_rdds(live, prev_ids)  # superseded round — free its blocks
-        prev_ids = cur_ids
-    if stats is not None:
-        stats["residual_rdd_ids"] = prev_ids  # free via release_result
+        unpin(prev)  # superseded round — free its blocks
     return (
         live.groupBy(F.col("u").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
@@ -667,21 +558,20 @@ def bfs_hops(
     accumulated labels + a distinct on the new frontier — the frontier
     never exceeds its hop shell, so total work is O(Σ shell edges) =
     O(m) over all rounds, not O(rounds · m). Lineage truncated per
-    round with the shared tracked-checkpoint / release discipline;
-    empty frontiers short-circuit the remaining rounds (a bounded
-    1-scalar driver check per round). Residual (final label table)
-    reported via ``stats`` for release_result."""
+    round with the shared checkpoint / unpin discipline; empty
+    frontiers short-circuit the remaining rounds (a bounded 1-scalar
+    driver check per round). The final label table stays pinned until
+    the caller releases its job group."""
     und = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    adj_ids: set[int] = set()
-    adj = _tracked_checkpoint(und, adj_ids)
+    adj = checkpoint(und)
     nodes = adj.select(F.col("u").alias("node")).distinct()
-    labels = nodes.where(seed_pred(F.col("node"))).select(
-        "node", F.lit(0).cast("int").alias("hops")
+    labels = checkpoint(
+        nodes.where(seed_pred(F.col("node"))).select(
+            "node", F.lit(0).cast("int").alias("hops")
+        )
     )
-    prev_ids: set[int] = set()
-    labels = _tracked_checkpoint(labels, prev_ids)
     frontier = labels.select("node")
     rounds_run = 0
     for i in range(1, n_rounds + 1):
@@ -694,24 +584,19 @@ def bfs_hops(
         new = reached.join(labels, "node", "left_anti").select(
             "node", F.lit(i).cast("int").alias("hops")
         )
-        cur_ids: set[int] = set()
-        labels = _tracked_checkpoint(labels.unionAll(new), cur_ids)
-        _release_rdds(labels, prev_ids)
-        prev_ids = cur_ids
+        prev, labels = labels, checkpoint(labels.unionAll(new))
+        unpin(prev)
         frontier = labels.where(F.col("hops") == i).select("node")
         rounds_run = i
         if frontier.limit(1).count() == 0:  # bounded 1-row driver check
             break
-    _release_rdds(labels, adj_ids)
+    unpin(adj)
     if stats is not None:
         stats["rounds"] = rounds_run
-        stats["residual_rdd_ids"] = prev_ids
     return labels
 
 
-def label_propagation(
-    edges: DataFrame, n_rounds: int = 3, stats: dict | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_rounds: int = 3) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al., 2007): every node starts as its own label; each round every
     node adopts the most frequent label among its NEIGHBORS, ties
@@ -727,19 +612,16 @@ def label_propagation(
     edges, both sides keyed by node — exchange-free after round one on
     a pre-partitioned cluster) + one hash agg per (node, label) + one
     deterministic argmax agg (max of (cnt, -label) struct — no window
-    sort). Lineage truncated per round with the tracked-checkpoint /
-    release discipline shared by every iterative operator here; the
-    residual (final label table) is reported via ``stats`` for
-    release_result."""
+    sort). Lineage truncated per round with the checkpoint / unpin
+    discipline shared by every iterative operator here; the final label
+    table stays pinned until the caller releases its job group."""
     und = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    adj_ids: set[int] = set()
-    adj = _tracked_checkpoint(und, adj_ids)
+    adj = checkpoint(und)
     labels = adj.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    prev_ids: set[int] = set()
     for i in range(n_rounds):
         _set_phase(adj, f"avocado:label_propagation:round {i + 1}")
         votes = (
@@ -749,7 +631,7 @@ def label_propagation(
         )
         # argmax(count desc, label asc) as ONE hash agg: max of the
         # (cnt, -label) struct selects highest count, then lowest label
-        labels = (
+        prev, labels = labels, checkpoint(
             votes.groupBy(F.col("v").alias("node"))
             .agg(
                 F.max(
@@ -762,13 +644,8 @@ def label_propagation(
             )
             .select("node", F.col("m.label").alias("label"))
         )
-        cur_ids: set[int] = set()
-        labels = _tracked_checkpoint(labels, cur_ids)
-        _release_rdds(labels, prev_ids)
-        prev_ids = cur_ids
-    _release_rdds(labels, adj_ids)  # rounds done — adjacency blocks free
-    if stats is not None:
-        stats["residual_rdd_ids"] = prev_ids
+        unpin(prev)
+    unpin(adj)  # rounds done — adjacency blocks free
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -829,9 +706,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     )
 
 
-def modularity(
-    edges: DataFrame, labels: DataFrame, stats: dict | None = None
-) -> DataFrame:
+def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Newman modularity Q of a community assignment over an
     undirected graph — the one-number "did the clustering find real
     structure?" score (Q > 0 means more intra-community edges than a
@@ -857,10 +732,8 @@ def modularity(
     NULL on an empty graph).
     """
     dec = "decimal(38,0)"
-    edge_ids: set[int] = set()
-    edges = _tracked_checkpoint(edges, edge_ids)
-    lab_ids: set[int] = set()
-    labels = _tracked_checkpoint(labels, lab_ids)
+    edges = checkpoint(edges)
+    labels = checkpoint(labels)
     m = edges.agg(F.count(F.lit(1)).cast(dec).alias("m"))
     lu = labels.select(F.col("node").alias("u"), F.col("community").alias("cu"))
     lv = labels.select(F.col("node").alias("v"), F.col("community").alias("cv"))
@@ -905,11 +778,8 @@ def modularity(
             ).alias("modularity"),
         )
     )
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)
-    _release_rdds(out, edge_ids | lab_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = residual
+    out = checkpoint(out)
+    unpin(edges, labels)
     return out
 
 
@@ -1083,13 +953,12 @@ def edge_strength(
     TakeOrderedAndProject; at sf0.1 that removed a 1.2M-row
     checkpoint write from the top-100 query.
     """
-    edge_ids: set[int] = set()
     # r13 optimization round: lazy checkpoint + one pack-stats agg as
     # the materializing action (shared with _edge_support via
     # pack_stats= — one full-scan agg instead of checkpoint job + agg
     # job), and the deg re-join on the support table rides the same
     # broadcast cap as the wedge machinery.
-    edges = _tracked_checkpoint(edges, edge_ids, eager=False)
+    edges = checkpoint(edges, eager=False)
     ps = _edge_pack_stats(edges)
     deg, support = _edge_support(edges, broadcast_max_edges, pack_stats=ps)
     deg_b = F.broadcast(deg) if ps[0] <= broadcast_max_edges else deg
@@ -1116,9 +985,8 @@ def edge_strength(
             F.col("u").asc(),
             F.col("v").asc(),
         ).limit(top_k)
-    residual: set[int] = set()
-    out = _tracked_checkpoint(scored, residual)
-    _release_rdds(out, edge_ids)
+    out = checkpoint(scored)
+    unpin(edges)
     return out
 
 
@@ -1148,8 +1016,7 @@ def jaccard_link_prediction(
     (jaccard_bp desc, common desc, u, v) — exact integer scoring, a
     deterministic total order.
     """
-    edge_ids: set[int] = set()
-    edges = _tracked_checkpoint(edges, edge_ids)
+    edges = checkpoint(edges)
     adj = (
         edges.select(F.col("u").alias("c"), F.col("v").alias("nb"))
         .unionAll(edges.select(F.col("v").alias("c"), F.col("u").alias("nb")))
@@ -1190,9 +1057,8 @@ def jaccard_link_prediction(
         F.col("u").asc(),
         F.col("v").asc(),
     ).limit(top_k)
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)
-    _release_rdds(out, edge_ids)
+    out = checkpoint(out)
+    unpin(edges)
     return out
 
 
@@ -1201,7 +1067,6 @@ def k_truss(
     k: int = 4,
     n_rounds: int = 3,
     broadcast_max_edges: int = 5_000_000,
-    stats: dict | None = None,
 ) -> DataFrame:
     """k-truss decomposition via ``n_rounds`` of synchronous EDGE
     peeling: each round drops every edge whose triangle support within
@@ -1216,8 +1081,8 @@ def k_truss(
     reaches the fixpoint inside the budget, at which point the result
     IS the true k-truss). Per round: one pass of the degree-oriented
     O(m^1.5) wedge machinery (:func:`_edge_support`) + one semi-join,
-    with the tracked-checkpoint / release discipline truncating lineage
-    and freeing superseded rounds. Support recomputation per round is
+    with the checkpoint / unpin discipline truncating lineage and
+    freeing superseded rounds. Support recomputation per round is
     inherent to peeling — at 100 TB prefer fewer rounds + the fixpoint
     assertion over an adaptive loop.
 
@@ -1226,10 +1091,9 @@ def k_truss(
     peel, so the output is self-consistent).
     """
     thr = k - 2
-    prev_ids: set[int] = set()
     # lazy checkpoint: the round-1 pack-stats agg just below is the
     # materializing action (r13 — one job instead of two)
-    live = _tracked_checkpoint(edges.select("u", "v"), prev_ids, eager=False)
+    live = checkpoint(edges.select("u", "v"), eager=False)
     # r13 optimization round: _edge_pack_stats is a full scan+agg job.
     # Peeling only ever REMOVES edges, so packability (id range) and
     # broadcastability (edge count ≤ cap) can only stay true once true
@@ -1245,22 +1109,14 @@ def k_truss(
             live, broadcast_max_edges, pack_stats=pack_stats if reusable else None
         )
         keep = support.where(F.col("support") >= thr).select("u", "v")
-        cur_ids: set[int] = set()
-        live = _tracked_checkpoint(
-            live.join(keep, ["u", "v"], "left_semi"), cur_ids
-        )
-        _release_rdds(live, prev_ids)
-        prev_ids = cur_ids
+        prev, live = live, checkpoint(live.join(keep, ["u", "v"], "left_semi"))
+        unpin(prev)
     _set_phase(live, "avocado:k_truss:final support")
     _, support = _edge_support(
         live, broadcast_max_edges, pack_stats=pack_stats if reusable else None
     )
-    out = live.join(support, ["u", "v"], "inner")
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)
-    _release_rdds(out, prev_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = residual
+    out = checkpoint(live.join(support, ["u", "v"], "inner"))
+    unpin(live)
     return out
 
 
@@ -1268,7 +1124,6 @@ def neighborhood_agg(
     edges: DataFrame,
     features: DataFrame,
     n_rounds: int = 2,
-    stats: dict | None = None,
 ) -> DataFrame:
     """GraphSAGE-style mean neighborhood feature aggregation in EXACT
     integer arithmetic — the feature-propagation pass that prepares
@@ -1283,7 +1138,7 @@ def neighborhood_agg(
     destinations) + ONE hash agg (sum + count per source) — both on
     the node key, so at cluster scale rounds after the first are
     exchange-free on a pre-partitioned graph; lineage truncated per
-    round with the tracked-checkpoint / release discipline. Nodes
+    round with the checkpoint / unpin discipline. Nodes
     absent from ``features`` contribute nothing (inner join) — give
     every node a feature row for the textbook semantics.
 
@@ -1294,11 +1149,9 @@ def neighborhood_agg(
     und = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    adj_ids: set[int] = set()
-    und = _tracked_checkpoint(und, adj_ids)
-    prev_ids: set[int] = set()
-    h = _tracked_checkpoint(
-        features.select("node", F.col("h").cast("bigint").alias("h")), prev_ids
+    und = checkpoint(und)
+    h = last = checkpoint(
+        features.select("node", F.col("h").cast("bigint").alias("h"))
     )
     for i in range(n_rounds):
         _set_phase(und, f"avocado:neighborhood_agg:round {i + 1}")
@@ -1320,15 +1173,12 @@ def neighborhood_agg(
         # every 3rd round (bounding plan depth for long runs) and at
         # the end; intermediate rounds chain lazily into one job.
         if (i + 1) % 3 == 0 or i + 1 == n_rounds:
-            cur_ids: set[int] = set()
-            h = _tracked_checkpoint(nxt, cur_ids)
-            _release_rdds(h, prev_ids)
-            prev_ids = cur_ids
+            h = checkpoint(nxt)
+            unpin(last)
+            last = h
         else:
             h = nxt
-    _release_rdds(h, adj_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = prev_ids
+    unpin(und)
     return h
 
 
@@ -1336,7 +1186,6 @@ def harmonic_centrality(
     edges: DataFrame,
     seed_bit,
     n_rounds: int = 3,
-    stats: dict | None = None,
     n_words: int = 1,
 ) -> DataFrame:
     """Sampled-source harmonic centrality: C_H(n) = Σ_s 1/d(s,n) over a
@@ -1372,8 +1221,8 @@ def harmonic_centrality(
     for oracle replayability. The symmetrized adjacency is
     checkpointed once and RELEASED before return (the final ≤|nodes|
     mask table is checkpointed instead — the edge_strength
-    discipline); the result's residual blocks are reported via
-    ``stats`` for release_result.
+    discipline) and stays pinned until the caller releases its job
+    group.
 
     Returns (node, harmonic_milli, n_reached) for nodes reached by ≥1
     panel source (a seed's own 0-distance bit is masked out).
@@ -1385,8 +1234,7 @@ def harmonic_centrality(
     # in-memory checkpoint blocks, so each round still scans 2m compact
     # rows but the materialization writes (and pins) half the rows.
     # Isolated A/B at sf0.1: 4.58 s → 4.37 s best-of-3 interleaved.
-    adj_ids: set[int] = set()
-    e = _tracked_checkpoint(edges.select("u", "v"), adj_ids)
+    e = checkpoint(edges.select("u", "v"))
     adj = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     ws = list(range(n_words))
     state = (
@@ -1421,8 +1269,7 @@ def harmonic_centrality(
     # c_{d−1}(u), and BIT_OR is the old coalesce-OR), so the lineage is
     # LINEAR: 2 Exchanges per round, every subtree computed once, and
     # the per-round left-join back onto state disappears.
-    st_ids: set[int] = set()
-    state = _tracked_checkpoint(state, st_ids)
+    state = state0 = checkpoint(state)
     # Enforce the seed_bit contract BEFORE the rounds: a bit outside
     # [0, 63·n_words) would otherwise map to an all-zero mask word and
     # silently drop that seed — quietly-wrong centralities instead of
@@ -1433,8 +1280,7 @@ def harmonic_centrality(
     # materialization action.)
     rng = state.agg(F.min("_bit").alias("_lo"), F.max("_bit").alias("_hi")).first()
     if rng["_lo"] is not None and (rng["_lo"] < 0 or rng["_hi"] >= 63 * n_words):
-        _release_rdds(state, adj_ids)
-        _release_rdds(state, st_ids)
+        unpin(e, state0)
         raise ValueError(
             f"harmonic_centrality: seed_bit out of range [{rng['_lo']}, "
             f"{rng['_hi']}] for n_words={n_words} (valid bits are "
@@ -1496,12 +1342,8 @@ def harmonic_centrality(
         total.cast("bigint").alias("harmonic_milli"),
         reached.cast("bigint").alias("n_reached"),
     ).where(F.col("n_reached") > 0)
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)
-    _release_rdds(out, adj_ids)
-    _release_rdds(out, st_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = residual
+    out = checkpoint(out)
+    unpin(e, state0)
     return out
 
 
@@ -1526,7 +1368,6 @@ def weighted_sssp(
     seed_pred,
     n_rounds: int = 4,
     weight_col: str = "w",
-    stats: dict | None = None,
     broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Multi-seed single-source-shortest-path over a WEIGHTED
@@ -1549,7 +1390,7 @@ def weighted_sssp(
 
     Per round: ONE equi-join of the current FRONTIER onto the
     symmetrized edges + one min hash agg, lineage truncated with the
-    tracked-checkpoint / release discipline. The frontier (nodes whose
+    checkpoint / unpin discipline. The frontier (nodes whose
     label improved last round) is exactly sufficient: a node whose
     label did not change has already pushed that label to all its
     neighbors the round it last improved, so relaxing it again is
@@ -1577,8 +1418,7 @@ def weighted_sssp(
             F.col("v").alias("u"), F.col("u").alias("v"), F.col(weight_col)
         )
     )
-    adj_ids: set[int] = set()
-    adj = _tracked_checkpoint(und, adj_ids)
+    adj = checkpoint(und)
     # r13 optimization round: the broadcast-cap guard used to run a
     # full DISTINCT over every endpoint (a 2m-row shuffle) just to
     # count nodes. The frontier the cap protects is bounded by the
@@ -1595,8 +1435,7 @@ def weighted_sssp(
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("dist"))
     )
-    prev_ids: set[int] = set()
-    dist = _tracked_checkpoint(dist, prev_ids)
+    dist = state = checkpoint(dist)
     frontier = dist  # round 1 relaxes the whole seed panel
     for i in range(1, n_rounds + 1):
         _set_phase(adj, f"avocado:weighted_sssp:round {i}")
@@ -1624,16 +1463,12 @@ def weighted_sssp(
                 F.min(F.when(F.col("_old"), F.col("dist"))).alias("_prev"),
             )
         )
-        cur_ids: set[int] = set()
-        state = _tracked_checkpoint(merged, cur_ids)
+        prev, state = state, checkpoint(merged)
         if i < n_rounds:
             frontier = state.where(
                 F.col("_prev").isNull() | (F.col("dist") < F.col("_prev"))
             ).select("node", "dist")
         dist = state.select("node", "dist")
-        _release_rdds(state, prev_ids)
-        prev_ids = cur_ids
-    _release_rdds(dist, adj_ids)
-    if stats is not None:
-        stats["residual_rdd_ids"] = prev_ids
+        unpin(prev)
+    unpin(adj)
     return dist

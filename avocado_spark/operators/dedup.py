@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from avocado_spark.checkpoints import persist
 from avocado_spark.operators.text import P, token_hash, tokens
 
 N_HASHES = 16
@@ -291,7 +292,7 @@ def _lsh_candidates(
     # window exchange across sides — persist so the signature fold +
     # band explode + bucket count run ONCE (at cluster scale: write
     # out / bucket the band table instead)
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
+    bands = persist(bands, StorageLevel.MEMORY_AND_DISK)
     join_keys = [*extra_keys, "band", "key"]
     return (
         bands.alias("a")
@@ -349,9 +350,7 @@ def minhash_lsh_pairs(
     # the shingle table is read 4× (both self-join sides + both verify
     # joins); persist so the tokenize/hash pass runs once — at cluster
     # scale this is the table you'd write out / bucket by doc_id
-    sh = shingle_table(docs, text_col, with_sig=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = persist(shingle_table(docs, text_col, with_sig=True), StorageLevel.MEMORY_AND_DISK)
     cand = _lsh_candidates(sh, max_band_bucket=max_band_bucket)
     return _verify_jaccard(cand, sh, jaccard_threshold)
 
@@ -372,9 +371,7 @@ def jaccard_band_histogram(
     0.5. The histogram is DEFINED over this candidate rule (both the
     engine and any replica must use the same bands), so the plan never
     materializes all pairs — O(candidates), not O(n²)."""
-    sh = shingle_table(docs, text_col, with_sig=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = persist(shingle_table(docs, text_col, with_sig=True), StorageLevel.MEMORY_AND_DISK)
     cand = _lsh_candidates(
         sh,
         max_band_bucket=max_band_bucket,
@@ -482,17 +479,16 @@ def ngram_jaccard_pairs(
     is identical; recall becomes the LSH band recall) — a coarse key
     like lang='en' would otherwise make one block most of the corpus.
     ``max_block_rows=None`` restores unconditional exact semantics."""
-    sh = shingle_table(
-        docs, text_col, k=k, out_col="sh", extra_cols=tuple(block_cols)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = persist(
+        shingle_table(docs, text_col, k=k, out_col="sh", extra_cols=tuple(block_cols)),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     if max_block_rows is not None:
         w = Window.partitionBy(*block_cols)
         # persist the sized table: the pairwise join reads `small`
         # twice and the LSH route reads `big` up to three times — the
         # block-size window should run once
-        sized = sh.withColumn("_blk", F.count("*").over(w)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        sized = persist(sh.withColumn("_blk", F.count("*").over(w)), StorageLevel.MEMORY_AND_DISK)
         small = sized.where(F.col("_blk") <= max_block_rows).drop("_blk")
         big = sized.where(F.col("_blk") > max_block_rows).drop("_blk")
     else:
@@ -573,9 +569,7 @@ def embedding_dup_pairs(
     if max_block_rows is not None:
         w = Window.partitionBy(block_col)
         # persist: both pairwise sides re-read the normed+sized table
-        sized = e.withColumn("_blk", F.count("*").over(w)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        sized = persist(e.withColumn("_blk", F.count("*").over(w)), StorageLevel.MEMORY_AND_DISK)
         small = sized.where(F.col("_blk") <= max_block_rows).drop("_blk")
         big = sized.where(F.col("_blk") > max_block_rows).drop("_blk")
     else:
@@ -701,7 +695,7 @@ def simhash_dup_pairs(
             .where(F.col("_bsz") <= max_band_bucket)
             .drop("_bsz")
         )
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
+    bands = persist(bands, StorageLevel.MEMORY_AND_DISK)
     a = bands.select("band", "key", F.col("doc_id").alias("a_id"), F.col("simhash").alias("sa"))
     b = bands.select("band", "key", F.col("doc_id").alias("b_id"), F.col("simhash").alias("sb"))
     cand = (
@@ -745,11 +739,9 @@ def prefix_filter_pairs(
     stays exact whenever no bucket exceeds the cap.
     """
     th = F.array_sort(F.array_distinct(F.transform(tokens(F.col(text_col)), token_hash)))
-    sets = (
-        _spread(docs)
-        .select("doc_id", th.alias("th"))
-        .where(F.size("th") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sets = persist(
+        _spread(docs).select("doc_id", th.alias("th")).where(F.size("th") > 0),
+        StorageLevel.MEMORY_AND_DISK,
     )
     tok = sets.select("doc_id", F.size("th").alias("n"), F.explode("th").alias("h"))
     dfreq = tok.groupBy("h").agg(F.count("*").alias("df"))
@@ -768,7 +760,7 @@ def prefix_filter_pairs(
             .where(F.col("_bsz") <= max_token_bucket)
             .drop("_bsz")
         )
-    pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
+    pref = persist(pref, StorageLevel.MEMORY_AND_DISK)
     cand = (
         pref.alias("a")
         .join(pref.alias("b"), "h")
@@ -874,7 +866,7 @@ def longgram_overlap_pairs(
         )
     # persist AFTER the cap so the gram explode + bucket window run
     # once, not once per self-join side
-    g = g.persist(StorageLevel.MEMORY_AND_DISK)
+    g = persist(g, StorageLevel.MEMORY_AND_DISK)
     pairs = (
         g.alias("a")
         .join(g.alias("b"), "g")
@@ -909,9 +901,7 @@ def minhash_incremental_pairs(
     """
 
     def sh_table(docs: DataFrame) -> DataFrame:
-        return shingle_table(docs, text_col, with_sig=True).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        return persist(shingle_table(docs, text_col, with_sig=True), StorageLevel.MEMORY_AND_DISK)
 
     def capped_bands(sh: DataFrame) -> DataFrame:
         bands = _band_table(sh)

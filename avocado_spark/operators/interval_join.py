@@ -31,7 +31,7 @@ Overlap semantics are half-open, matching ReferenceRegion
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_BIN_WIDTH = 10_000
@@ -65,46 +65,6 @@ def _auto_strategy(left: DataFrame) -> str:
         "broadcast"
         if left.limit(BROADCAST_MAX_ROWS + 1).count() <= BROADCAST_MAX_ROWS
         else "binned"
-    )
-
-
-_NATIVE_RANGE_JOIN: dict[str, bool] = {}  # per-session probe cache
-
-
-def native_range_join_available(spark) -> bool:
-    """Runtime capability probe (r7 verdict stretch #9): some Spark
-    distributions (Databricks DBR's RANGE_JOIN hint; a session with a
-    range-join strategy injected via spark.sql.extensions) plan an
-    O(n log n) binned range join natively. OSS Spark 4.1 does NOT — the
-    hint is silently ignored and the theta join degrades to a
-    BroadcastNestedLoopJoin, measured 4× slower than our binned
-    equi-join at sf0.1 already and quadratic at scale. Probe the
-    EXPLAIN output of a 2-row hinted join once per session; callers
-    (``strategy='native'``) fall back to 'binned' when absent, so the
-    same pipeline code runs on both runtimes and picks up the native
-    operator when it exists."""
-    key = spark.sparkContext.applicationId
-    if key not in _NATIVE_RANGE_JOIN:
-        try:
-            a = spark.range(2).select(
-                F.col("id").alias("s"), (F.col("id") + 1).alias("e")
-            )
-            b = spark.range(2).select(F.col("id").alias("p"))
-            j = a.hint("range_join", 1).join(
-                b, (b["p"] >= a["s"]) & (b["p"] < a["e"])
-            )
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            _NATIVE_RANGE_JOIN[key] = "RangeJoin" in plan
-        except Exception:  # pragma: no cover — probe must never break callers
-            _NATIVE_RANGE_JOIN[key] = False
-    return _NATIVE_RANGE_JOIN[key]
-
-
-def _overlap_cond(left: DataFrame, right: DataFrame, lpre: str, rpre: str) -> Column:
-    return (
-        (left[f"{lpre}contig"] == right[f"{rpre}contig"])
-        & (left[f"{lpre}start"] < right[f"{rpre}end"])
-        & (left[f"{lpre}end"] > right[f"{rpre}start"])
     )
 
 
@@ -162,35 +122,8 @@ def interval_join(
     if strategy == "auto":
         strategy = _auto_strategy(left)
 
-    if strategy == "native":
-        # use the runtime's own range-join operator when one exists
-        # (DBR RANGE_JOIN hint / injected strategy); OSS Spark has none
-        # — fall back to the binned equi-join rather than silently
-        # shipping the O(n·m) nested loop the ignored hint leaves.
-        if native_range_join_available(left.sparkSession):
-            j = lp.hint("range_join", bin_width).join(
-                rp, _overlap_cond(lp, rp, lprefix, rprefix), how
-            )
-            return j.select(
-                *[lp[c] for c in lp.columns], *[rp[c] for c in rp.columns]
-            )
-        strategy = "binned"
-
-    if strategy not in ("broadcast", "binned", "nlj"):
+    if strategy not in ("broadcast", "binned"):
         raise ValueError(f"unknown strategy: {strategy}")
-
-    if strategy == "nlj":
-        # plain theta join — kept for plan comparison/debugging only
-        if how == "left":
-            # left-preserving: lp must be the streamed/preserved side
-            # (rp.join(lp, ..., 'left') would preserve RIGHT rows — the
-            # inverse of the documented contract)
-            return lp.join(rp, _overlap_cond(lp, rp, lprefix, rprefix), "left").select(
-                *[lp[c] for c in lp.columns], *[rp[c] for c in rp.columns]
-            )
-        return rp.join(F.broadcast(lp), _overlap_cond(lp, rp, lprefix, rprefix), how).select(
-            *[lp[c] for c in lp.columns], *[rp[c] for c in rp.columns]
-        )
 
     # both scalable paths are bin-bucketed equi joins; 'broadcast' only
     # adds the hint on the (binned) small side so the big side neither

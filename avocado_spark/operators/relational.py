@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from avocado_spark.checkpoints import checkpoint, unpin
+
 
 def prefilter_reads(
     reads: DataFrame,
@@ -2302,7 +2304,6 @@ def weighted_quantile(
     q_num: int = 1,
     q_den: int = 2,
     out_col: str = "wq_value",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Exact weighted quantile per group: the smallest ``value_col``
     whose running weight (in value order) reaches q_num/q_den of the
@@ -2334,7 +2335,7 @@ def weighted_quantile(
         # global_rank's 31-literal bucket expression, whose first
         # compile cost (~10 s) re-paid on every fresh plan was the
         # whole cost of the 2.9M-slope Theil–Sen median.
-        return _ungrouped_weighted_quantile(g, q_num, q_den, out_col, stats)
+        return _ungrouped_weighted_quantile(g, q_num, q_den, out_col)
     r = global_rank(
         g,
         [F.col("_wq_v")],
@@ -2371,42 +2372,33 @@ def _ungrouped_weighted_quantile(
     q_num: int,
     q_den: int,
     out_col: str,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Single-order-statistic refinement for the ungrouped quantile:
     (1) ONE range exchange of the (value, weight) table, pinned with a
-    tracked checkpoint so every later read sees the same partitioning;
+    checkpoint so every later read sees the same partitioning;
     (2) per-partition weight totals (≤ partitions rows) to the driver;
     (3) the exact threshold compare runs only inside the one partition
     that straddles q — its cumsum window is single-partition but holds
     ≤ input/partitions rows by the range exchange, and the exchange's
-    blocks are released once the 1-row result materializes.
+    blocks are unpinned once the 1-row result materializes.
     Same semantics as the grouped path: smallest value whose running
     weight satisfies q_den·cum ≥ q_num·total, exact integers only."""
     from pyspark.sql import Window
 
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
-
     sess = g.sparkSession
     nparts = _default_buckets(sess)
-    ids: set[int] = set()
     # LAZY checkpoint (r13): the partition-weight rollup right below is
     # the first action and reads every partition, so it materializes
     # the pinned blocks itself — the separate eager-materialization job
     # this used to run was pure overhead
-    rg = _tracked_checkpoint(
-        g.repartitionByRange(nparts, F.col("_wq_v").asc()), ids, eager=False
-    )
+    rg = checkpoint(g.repartitionByRange(nparts, F.col("_wq_v").asc()), eager=False)
     parts = (
         rg.groupBy(F.spark_partition_id().alias("_wq_pid"))
         .agg(F.sum("_wq_w").alias("_wq_pw"))
         .collect()
     )  # ≤ nparts rows — bounded driver scalar set
     if not parts:
-        _release_rdds(rg, ids)
+        unpin(rg)
         return g.agg(
             F.min("_wq_v").alias(out_col),
             F.coalesce(F.sum("_wq_w"), F.lit(0)).cast("bigint").alias(
@@ -2439,9 +2431,6 @@ def _ungrouped_weighted_quantile(
         vmin.alias(out_col),
         F.lit(int(tot)).cast("bigint").alias("total_weight"),
     )
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)  # 1-row residual block
-    _release_rdds(out, ids)
-    if stats is not None:
-        stats.setdefault("residual_rdd_ids", set()).update(residual)
+    out = checkpoint(out)  # 1-row result block
+    unpin(rg)
     return out

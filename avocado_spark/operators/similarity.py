@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from avocado_spark.checkpoints import checkpoint, unpin
 from avocado_spark.operators.dedup import cosine_with_norms, norm
 
 N_PLANES = 8
@@ -294,16 +295,17 @@ def train_ivf_centroids(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
             ).alias("c_v_new")
         )
-        cents = (
+        cents = checkpoint(
             cents.join(newc, "c_id", "left")
-            .select("c_id", F.coalesce("c_v_new", "c_v").alias("c_v"))
+            .select("c_id", F.coalesce("c_v_new", "c_v").alias("c_v")),
             # empty cells keep their centroid. LAZY checkpoint (r13
             # optimization round): each round's first consumer is the
             # next round's (or the caller's) broadcast build, which
             # materializes these 8 rows anyway — the separate eager
             # job per round was pure scheduling overhead. Same pinned
-            # blocks, same flat lineage.
-            .localCheckpoint(eager=False)
+            # blocks, same flat lineage; no round is unpinned, as none
+            # is materialized before the caller's action.
+            eager=False,
         )
     return cents
 
@@ -542,13 +544,13 @@ def train_pq_codebooks(
                 F.array_sort(F.collect_list(F.struct("pos", "mv"))), lambda s: s["mv"]
             ).alias("c_v_new")
         )
-        cents = (
+        cents = checkpoint(
             cents.join(newc, ["m", "c_id"], "left")
-            .select("m", "c_id", F.coalesce("c_v_new", "c_v").alias("c_v"))
+            .select("m", "c_id", F.coalesce("c_v_new", "c_v").alias("c_v")),
             # empty cells keep their codeword; lazy for the same reason
             # as train_ivf_centroids — the first broadcast build is the
             # materializing action (r13 optimization round).
-            .localCheckpoint(eager=False)
+            eager=False,
         )
     return cents
 
@@ -842,12 +844,11 @@ def mmr_diversify_topk(
     machinery (rank window per query); the ONLY pairwise work is the
     candidate×candidate similarity table — n_candidates² rows per
     query, a driver-known bound, never corpus×corpus. Both bounded
-    tables are eagerly checkpointed ONCE (tracked ids, released before
-    return — the components-module discipline), and each greedy round
-    collects only its per-query argmax (≤ |queries| rows, bounded by
-    MAX_EVAL_QUERIES) and freezes it as plan literals — the same
-    materialize-per-round rule the BPE trainer follows, so round t
-    never re-executes rounds 1..t−1 and plan depth stays flat.
+    tables are eagerly checkpointed ONCE (unpinned before return), and
+    each greedy round collects only its per-query argmax (≤ |queries|
+    rows, bounded by MAX_EVAL_QUERIES) and freezes it as plan literals
+    — the same materialize-per-round rule the BPE trainer follows, so
+    round t never re-executes rounds 1..t−1 and plan depth stays flat.
 
     Determinism contract (both engines replay it): rel and sim are
     round(cos, 9); each round's score re-rounds to 9dp; argmax ties
@@ -865,15 +866,14 @@ def mmr_diversify_topk(
     shortlists, wrong as a corpus-wide serving path (there you'd push
     MMR into the application layer over the already-retrieved top-N).
     """
-    from avocado_spark.operators.components import _release_rdds, _tracked_checkpoint
-
     spark = embeddings.sparkSession
-    owned: set[int] = set()
+    pins: list[DataFrame] = []
     try:
         cand = brute_force_topk(
             embeddings, queries, k=n_candidates, allow_full_scan=allow_full_scan
         ).select("q_id", F.col("n_id").alias("c_id"), F.col("cos").alias("rel"))
-        cand = _tracked_checkpoint(cand, owned)
+        cand = checkpoint(cand)
+        pins.append(cand)
         e = embeddings.select(
             F.col("vec_id").alias("_e_id"), _as_double("embedding").alias("_e_v")
         ).withColumn("_e_n", norm(F.col("_e_v")))
@@ -920,7 +920,8 @@ def mmr_diversify_topk(
             (cand["q_id"] == simm["qm_id"]) & (cand["c_id"] == simm["a_id"]),
             "left",
         ).select("q_id", "c_id", "rel", "smap")
-        candm = _tracked_checkpoint(candm, owned)
+        candm = checkpoint(candm)
+        pins.append(candm)
 
         def _argmax(scored: DataFrame) -> list:
             # (q_id, vec_id, score) rows: max score, smaller-id tiebreak
@@ -971,7 +972,7 @@ def mmr_diversify_topk(
                 (r["q_id"], t, r["vec_id"], r["score"]) for r in _argmax(scored)
             )
     finally:
-        _release_rdds(embeddings, owned)
+        unpin(*pins)
     return spark.createDataFrame(
         picks, "q_id long, mmr_rank int, vec_id long, score double"
     )

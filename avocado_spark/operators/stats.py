@@ -42,6 +42,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from avocado_spark.checkpoints import checkpoint, unpin
+
 _DEC = "decimal(38,0)"
 
 
@@ -464,7 +466,6 @@ def theil_sen(
     t_col: str,
     y_col: str,
     max_points: int = 5_000,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Theil–Sen robust trend: the median of all pairwise slopes
     (y_j−y_i)/(t_j−t_i), with the matching median-residual intercept —
@@ -483,7 +484,7 @@ def theil_sen(
     Returns ONE row: n_points, n_pairs, slope (6 dp), intercept (6 dp).
 
     Recompute discipline: the O(n²/2) pair explode is pre-aggregated
-    to a (slope, weight) table and TRACKED-CHECKPOINTED, so the pair
+    to a (slope, weight) table and CHECKPOINTED, so the pair
     pipeline runs exactly once; the SLOPE median rides
     weighted_quantile's UNGROUPED fast path (one range exchange +
     driver histogram + a window over only the straddling partition),
@@ -494,17 +495,12 @@ def theil_sen(
     the sf0.1 query cost 27.9 s (the pair explode re-ran ~5× and the
     31-literal bucket projection re-paid a ~10 s first-compile per
     fresh plan); checkpointed + fast-path it is ~4-6 s. The bounded
-    input series is checkpointed too, and all blocks are released
+    input series is checkpointed too, and all blocks are unpinned
     before the literal 1-row result returns.
     """
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
     from avocado_spark.operators.relational import weighted_quantile
 
-    ser_ids: set[int] = set()
-    series = _tracked_checkpoint(series, ser_ids)
+    series = checkpoint(series)
     # distinct-t contract check, UP FRONT: a duplicate t makes Δt = 0,
     # which under ANSI mode throws an opaque DIVIDE_BY_ZERO deep in the
     # pair stage (and under non-ANSI yields a NULL slope the weighted
@@ -514,13 +510,13 @@ def theil_sen(
     # one sequential driver job, not two.
     n_rows, dup_t = _dup_and_count(series, [t_col])
     if dup_t is not None:
-        _release_rdds(series, ser_ids)
+        unpin(series)
         raise ValueError(
             f"theil_sen: duplicate t value {dup_t[0]!r} — pairwise "
             "slopes need distinct t (Δt = 0 is undefined); deduplicate "
             "or pre-aggregate t first"
         )
-    grp_ids: set[int] = set()
+    grouped = None
     try:
         pairs = bounded_self_pairs(
             series, t_col, [y_col], max_points, n_rows=n_rows
@@ -530,21 +526,22 @@ def theil_sen(
                 f"CAST(r_{y_col} - l_{y_col} AS DOUBLE) / CAST(r_{t_col} - l_{t_col} AS DOUBLE)"
             ).alias("_ts_slope")
         )
-        grouped = slopes.groupBy("_ts_slope").agg(
-            F.count(F.lit(1)).cast("bigint").alias("_ts_w")
+        grouped = checkpoint(  # pair explode runs ONCE
+            slopes.groupBy("_ts_slope").agg(
+                F.count(F.lit(1)).cast("bigint").alias("_ts_w")
+            )
         )
-        grouped = _tracked_checkpoint(grouped, grp_ids)  # pair explode runs ONCE
-        med = weighted_quantile(grouped, [], "_ts_slope", "_ts_w", stats=stats)
+        med = weighted_quantile(grouped, [], "_ts_slope", "_ts_w")
         row = med.first()  # 1-row bounded driver scalar
-        _release_rdds(grouped, grp_ids)  # medians collected — slopes free
+        unpin(grouped)  # medians collected — slopes free
         if row is None:
-            _release_rdds(series, ser_ids)
+            unpin(series)
             return series.sparkSession.createDataFrame(
                 [], "n_points bigint, n_pairs bigint, slope double, intercept double"
             )
         slope = float(row["wq_value"])
         if not math.isfinite(slope):
-            _release_rdds(series, ser_ids)
+            unpin(series)
             raise ValueError(
                 "theil_sen: non-finite median slope — the input violates the "
                 "distinct-t contract (a duplicate t value makes a pairwise "
@@ -580,18 +577,18 @@ def theil_sen(
             F.round(F.lit(float(med_resid)), 6).alias("intercept"),
         )
     except BaseException:
-        # release-on-raise (r13, ADVICE): the max_points cap ValueError
+        # unpin-on-raise (r13, ADVICE): the max_points cap ValueError
         # from bounded_*_pairs — or any downstream failure — must not
-        # leak the checkpointed series blocks for the session
-        # (_tracked_checkpoint's GC never reclaims them). _release_rdds
-        # clears the set, so paths that already released are a no-op.
-        _release_rdds(series, ser_ids)
-        _release_rdds(series, grp_ids)  # slope table, if checkpointed
+        # leak the checkpointed series blocks for the session. unpin
+        # of a table already freed is a no-op.
+        unpin(series)
+        if grouped is not None:
+            unpin(grouped)
         raise
     # the residuals were collected above, so the series blocks are no
     # longer read by anything — and the returned 1-row plan is literal,
-    # so there are no residual checkpoint blocks to report
-    _release_rdds(series, ser_ids)
+    # so nothing stays pinned
+    unpin(series)
     return out
 
 
@@ -627,7 +624,6 @@ def mann_kendall(
     t_col: str,
     y_col: str,
     max_points: int = 5_000,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Mann–Kendall trend test: S = Σ_{i<j by t} sign(y_j − y_i) with
     the tie-corrected normal approximation (Kendall 1975; Gilbert
@@ -650,25 +646,20 @@ def mann_kendall(
 
     Recompute discipline (theil_sen's, r12): the input plan feeds
     THREE evaluations (the cap count, the pair-array agg, and the
-    y-tie-group agg), so it is tracked-checkpointed up front — one
+    y-tie-group agg), so it is checkpointed up front — one
     scan of the upstream rollup, one consistent snapshot — and the
-    blocks are released once the 1-row result is checkpointed. The
+    blocks are unpinned once the 1-row result is checkpointed. The
     distinct-t contract is ENFORCED (same guard as theil_sen): a
     duplicate t would make bounded_self_pairs' struct sort break the
     tie by y, so every same-t pair contributes sign(y_j−y_i) ≥ 0 and
     silently inflates S.
     """
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
 
-    ser_ids: set[int] = set()
-    series = _tracked_checkpoint(series, ser_ids)
+    series = checkpoint(series)
     # contract check + pair-cap count in ONE driver job (r13)
     n_rows, dup_t = _dup_and_count(series, [t_col])
     if dup_t is not None:
-        _release_rdds(series, ser_ids)
+        unpin(series)
         raise ValueError(
             f"mann_kendall: duplicate t value {dup_t[0]!r} — S is "
             "defined over time-ordered pairs and same-t pairs have no "
@@ -717,19 +708,14 @@ def mann_kendall(
                 "p_value"
             ),
         )
-        residual: set[int] = set()
-        out = _tracked_checkpoint(out, residual)  # 1-row result block
+        out = checkpoint(out)  # 1-row result block
     except BaseException:
-        # release-on-raise (r13, ADVICE): the max_points cap ValueError
+        # unpin-on-raise (r13, ADVICE): the max_points cap ValueError
         # from bounded_*_pairs — or any downstream failure — must not
         # leak the checkpointed series blocks for the session
-        # (_tracked_checkpoint's GC never reclaims them). _release_rdds
-        # clears the set, so paths that already released are a no-op.
-        _release_rdds(series, ser_ids)
+        unpin(series)
         raise
-    _release_rdds(out, ser_ids)  # series blocks superseded
-    if stats is not None:
-        stats.setdefault("residual_rdd_ids", set()).update(residual)
+    unpin(series)  # series blocks superseded
     return out
 
 
@@ -739,7 +725,6 @@ def seasonal_mann_kendall(
     t_col: str,
     y_col: str,
     max_points: int = 5_000,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Seasonal (Mann–)Kendall trend test (Hirsch, Slack & Smith
     1982): S and 18·Var are computed PER SEASON over within-season
@@ -759,22 +744,17 @@ def seasonal_mann_kendall(
 
     Distinct-(season, t) contract, ENFORCED like mann_kendall's
     distinct-t: same-t pairs within a season have no time order. The
-    input is tracked-checkpointed (three evaluations: cap count, pair
-    agg, tie agg) and released once the 1-row result materializes.
+    input is checkpointed (three evaluations: cap count, pair
+    agg, tie agg) and unpinned once the 1-row result materializes.
 
     Returns ONE row: n_points, n_seasons, s_stat, var18, p_value
     (NULL when var18 = 0)."""
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
 
-    ser_ids: set[int] = set()
-    series = _tracked_checkpoint(series, ser_ids)
+    series = checkpoint(series)
     # contract check + pair-cap count in ONE driver job (r13)
     n_rows, dup = _dup_and_count(series, [season_col, t_col])
     if dup is not None:
-        _release_rdds(series, ser_ids)
+        unpin(series)
         raise ValueError(
             f"seasonal_mann_kendall: duplicate (season, t) = "
             f"({dup[0]!r}, {dup[1]!r}) — within-season "
@@ -838,19 +818,14 @@ def seasonal_mann_kendall(
                 "p_value"
             ),
         )
-        residual: set[int] = set()
-        out = _tracked_checkpoint(out, residual)  # 1-row result block
+        out = checkpoint(out)  # 1-row result block
     except BaseException:
-        # release-on-raise (r13, ADVICE): the max_points cap ValueError
+        # unpin-on-raise (r13, ADVICE): the max_points cap ValueError
         # from bounded_*_pairs — or any downstream failure — must not
         # leak the checkpointed series blocks for the session
-        # (_tracked_checkpoint's GC never reclaims them). _release_rdds
-        # clears the set, so paths that already released are a no-op.
-        _release_rdds(series, ser_ids)
+        unpin(series)
         raise
-    _release_rdds(out, ser_ids)
-    if stats is not None:
-        stats.setdefault("residual_rdd_ids", set()).update(residual)
+    unpin(series)
     return out
 
 
@@ -1225,27 +1200,21 @@ def conformal_interval(
 
     Returns one row per holdout point: t, x, pred, lo, hi, covered.
     """
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
     from avocado_spark.operators.relational import weighted_quantile
 
     schema = (
         f"{t_col} bigint, {x_col} bigint, pred bigint, "
         "lo bigint, hi bigint, covered boolean"
     )
-    ids: set[int] = set()
-    ser = _tracked_checkpoint(
+    ser = checkpoint(
         series.select(
             F.col(t_col).cast("bigint").alias("_cf_t"),
             F.col(x_col).cast("bigint").alias("_cf_x"),
-        ),
-        ids,
+        )
     )
     mx = ser.agg(F.max("_cf_t").alias("m")).first()
     if mx is None or mx["m"] is None:
-        _release_rdds(ser, ids)
+        unpin(ser)
         return series.sparkSession.createDataFrame([], schema)
     maxd = int(mx["m"])
     pred = ser.select(
@@ -1261,7 +1230,7 @@ def conformal_interval(
     cov_num = alpha_den - alpha_num
     k = ((n_cal + 1) * cov_num + alpha_den - 1) // alpha_den
     if n_cal == 0 or k > n_cal:
-        _release_rdds(ser, ids)
+        unpin(ser)
         return series.sparkSession.createDataFrame([], schema)
     qrow = weighted_quantile(
         cal, [], "_cf_r", "_cf_w", q_num=k, q_den=n_cal
@@ -1281,9 +1250,8 @@ def conformal_interval(
             ).alias("covered"),
         )
     )
-    residual: set[int] = set()
-    out = _tracked_checkpoint(out, residual)  # holdout-sized result
-    _release_rdds(out, ids)
+    out = checkpoint(out)  # holdout-sized result
+    unpin(ser)
     return out
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from avocado_spark.checkpoints import checkpoint, unpin
+
 P = 1_000_000_007
 
 # tiny per-language function-word marker sets for the n-gram/stopword
@@ -771,7 +773,7 @@ def bpe_phrase_merges(
 
     Iterative-dataflow discipline (the same as the CC loop, r7
     advice): the positional table is eagerly ``localCheckpoint``ed per
-    round with the superseded round's blocks released, so round k's
+    round with the superseded round's blocks unpinned, so round k's
     plan is one rewrite over a materialized table — not a k-deep nest
     re-executing every prior rewrite. The per-round argmax is ONE row,
     collected to the driver and frozen into the next rewrite as
@@ -798,15 +800,11 @@ def bpe_phrase_merges(
         )
     from pyspark.sql import Window
 
-    from avocado_spark.operators.components import _release_rdds, _tracked_checkpoint
-
-    prev_ids: set[int] = set()
-    pos = _tracked_checkpoint(
+    pos = checkpoint(
         docs.select(
             F.col("doc_id"),
             F.posexplode(tokens(F.col("text"))).alias("pos", "sym"),
-        ),
-        prev_ids,
+        )
     )
     rule_rows: list[tuple] = []
     for it in range(1, n_merges + 1):
@@ -825,18 +823,15 @@ def bpe_phrase_merges(
         left, right, n_pair = best[0]["sym"], best[0]["nxt"], int(best[0]["n"])
         merged = f"{left} {right}"
         rule_rows.append((it, left, right, merged, n_pair))
-        cur_ids: set[int] = set()
-        pos = _tracked_checkpoint(_greedy_apply(cur, left, right, merged), cur_ids)
-        _release_rdds(pos, prev_ids)  # superseded round — free its blocks
-        prev_ids = cur_ids
+        prev, pos = pos, checkpoint(_greedy_apply(cur, left, right, merged))
+        unpin(prev)  # superseded round — free its blocks
     if encoded_out is not None:
         # hand the final ENCODED positional table (and its pinned
         # blocks) to the caller — bpe_encode_stats reads it instead of
         # re-running every rewrite round
         encoded_out["encoded"] = pos
-        encoded_out["residual_rdd_ids"] = prev_ids
     else:
-        _release_rdds(pos, prev_ids)  # rules are driver literals — free all
+        unpin(pos)  # rules are driver literals — free all
     return docs.sparkSession.createDataFrame(
         rule_rows,
         "iteration int, left_sym string, right_sym string, "
@@ -1089,31 +1084,23 @@ def bpe_apply(
     semantics of the training loop; returns the encoded positional
     table (doc_id, pos, sym).
 
-    Same iterative discipline as training: per-rule tracked
-    ``localCheckpoint`` with the superseded round's blocks released.
-    The final encoded table stays pinned for the caller (it IS the
-    result); release via components.release_result semantics if the
-    session is long-lived."""
-    from avocado_spark.operators.components import _release_rdds, _tracked_checkpoint
+    Same iterative discipline as training: a ``localCheckpoint`` per
+    rule, with the superseded round unpinned. The final encoded table
+    stays pinned for the caller (it IS the result) until the caller
+    releases its job group."""
     from pyspark.sql import Window
 
-    prev_ids: set[int] = set()
-    pos = _tracked_checkpoint(
+    pos = checkpoint(
         docs.select(
             F.col("doc_id"),
             F.posexplode(tokens(F.col(text_col))).alias("pos", "sym"),
-        ),
-        prev_ids,
+        )
     )
     for left, right in merges:
         wd = Window.partitionBy("doc_id").orderBy("pos")
         cur = pos.withColumn("nxt", F.lead("sym").over(wd))
-        cur_ids: set[int] = set()
-        pos = _tracked_checkpoint(
-            _greedy_apply(cur, left, right, f"{left} {right}"), cur_ids
-        )
-        _release_rdds(pos, prev_ids)
-        prev_ids = cur_ids
+        prev, pos = pos, checkpoint(_greedy_apply(cur, left, right, f"{left} {right}"))
+        unpin(prev)
     return pos
 
 
@@ -1121,7 +1108,6 @@ def bpe_encode_stats(
     docs: DataFrame,
     n_merges: int = 5,
     text_col: str = "text",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Train ``n_merges`` BPE phrase rules on the corpus, apply them,
     and report per-document compression — the sizing artifact a
@@ -1135,10 +1121,8 @@ def bpe_encode_stats(
     positional table IS the encoded corpus (handed back via
     ``encoded_out``), so this costs exactly the training rounds plus
     two tiny aggs — no re-encoding. The per-doc result is eagerly
-    materialized so the encoded table's blocks can be released before
-    returning (zero residual)."""
-    from avocado_spark.operators.components import _release_rdds, _tracked_checkpoint
-
+    materialized so the encoded table's blocks can be unpinned before
+    returning; only the per-doc result stays pinned."""
     enc: dict = {}
     bpe_phrase_merges(docs, n_merges=n_merges, encoded_out=enc)
     before = docs.select(
@@ -1155,13 +1139,8 @@ def bpe_encode_stats(
             F.col("n_tokens_after").cast("double") / F.col("n_tokens_before"), 6
         ).alias("compression"),
     )
-    result_ids: set[int] = set()
-    out = _tracked_checkpoint(out, result_ids)
-    _release_rdds(out, enc["residual_rdd_ids"])
-    if stats is not None:
-        # the (per-doc-sized) result table's blocks — free via
-        # components.release_result once consumed
-        stats["residual_rdd_ids"] = result_ids
+    out = checkpoint(out)
+    unpin(enc["encoded"])
     return out
 
 

@@ -2150,10 +2150,7 @@ def customer_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window) and the grand total is a broadcast
     one-row aggregate."""
     o = _t(spark, sf_dir, "orders")
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
+    from avocado_spark.checkpoints import checkpoint, unpin
     from avocado_spark.operators.relational import global_rank
 
     rev = o.groupBy("o_custkey").agg(
@@ -2167,8 +2164,7 @@ def customer_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the grand-total branch. Checkpoint the ≤|customers|-row
     # aggregate once (the rfm pattern); the count doubles as
     # global_rank's rows_hint so its own count job disappears too.
-    owned: set[int] = set()
-    rev = _tracked_checkpoint(rev, owned)
+    rev = checkpoint(rev)
     n_customers = rev.count()
     cum = global_rank(
         rev,
@@ -2193,7 +2189,7 @@ def customer_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # return a local relation (the rfm discipline — the caller's action
     # can never recompute dead lineage).
     rows = out.collect()
-    _release_rdds(out, owned)
+    unpin(rev)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -2870,7 +2866,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (the shared count, three ranks, and the join-back) read
     cached blocks instead of re-running the orders scan+agg; the cube
     is bounded by construction, so it is materialized here and the
-    checkpoint blocks released before returning — nothing persists
+    checkpoint blocks unpinned before returning — nothing persists
     past the call."""
     o = _t(spark, sf_dir, "orders")
     anchor = o.agg(F.max("o_orderdate").alias("_a"))
@@ -2898,13 +2894,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each global_rank skips its own count, and doubles as the literal
     # n in the quintile formula. per_cust is checkpointed first: five
     # consumers would otherwise re-run the orders scan+agg each.
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
+    from avocado_spark.checkpoints import checkpoint, unpin
 
-    owned: set[int] = set()
-    per_cust = _tracked_checkpoint(per_cust, owned)
+    per_cust = checkpoint(per_cust)
     n_customers = per_cust.count()
     # r13 optimization round: the three rank branches used to join back
     # onto per_cust in a 3-deep equi-join chain — four exchanges (each
@@ -2966,7 +2958,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it, free the checkpoint blocks, and hand back a local DataFrame —
     # the caller's collect cannot trigger a recompute of dead lineage.
     rows = cube.collect()
-    _release_rdds(cube, owned)
+    unpin(per_cust)
     return spark.createDataFrame(rows, cube.schema)
 
 

@@ -2754,13 +2754,16 @@ def cdc_dedup_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     copied documents share most CDC chunks, so bytes_unique <<
     bytes_total measures the shift-resistant dedup win. One fp
     group-agg + one global rollup."""
+    from pyspark.storagelevel import StorageLevel
+
+    from avocado_spark.checkpoints import persist
     from avocado_spark.operators.multimodal import cdc_chunks
 
     docs = _aug_docs(load_table(spark, sf_dir, "documents"))
     media = docs.select(
         F.col("doc_id").alias("media_id"), F.encode("text", "utf-8").alias("payload")
     )
-    ch = cdc_chunks(media).persist()
+    ch = persist(cdc_chunks(media), StorageLevel.MEMORY_AND_DISK_DESER)
     uniq = ch.groupBy("fp").agg(F.min("length").alias("mlen"))
     totals = ch.agg(
         F.count("*").cast("bigint").alias("n_chunks"),
@@ -4491,13 +4494,9 @@ def dedup_pair_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents scan + shingle pass executed ~8× per run. The sample is
     # ≤ ~480 rows BY CONSTRUCTION (fixed id range), so checkpoint it
     # once; every branch then reads the tiny pinned blocks.
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
+    from avocado_spark.checkpoints import checkpoint, unpin
 
-    owned: set[int] = set()
-    sh = _tracked_checkpoint(sh, owned)
+    sh = checkpoint(sh)
     a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
     b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))
     inter = F.size(F.array_intersect("a_s", "b_s"))
@@ -4534,7 +4533,7 @@ def dedup_pair_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 row by construction: materialize, free the checkpoint blocks,
     # return a local relation (the rfm discipline).
     rows = out.collect()
-    _release_rdds(out, owned)
+    unpin(sh)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -4861,9 +4860,10 @@ def quality_isotonic_calibration_q(spark: SparkSession, sf_dir: str) -> DataFram
     interval. Output iso_rate is monotone non-decreasing in decile
     where the raw rate need not be."""
     from avocado_spark.operators.relational import isotonic_calibrate
-    from avocado_spark.queries import QUERIES
 
-    rel = QUERIES["quality_reliability_table"](spark, sf_dir)
+    # the undecorated builder, so the job group (and every pin) stays
+    # this query's
+    rel = quality_reliability_table_q(spark, sf_dir)
     out = isotonic_calibrate(rel, "decile", "n_passed", "n_docs")
     return out.select(
         F.col("decile").cast("bigint").alias("decile"),
@@ -4955,9 +4955,7 @@ def langid_agreement_kappa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-values (κ = (N·diag − Σrᵢcᵢ)/(N² − Σrᵢcᵢ)); computed on the
     tiny confusion matrix the langid_confusion query already emits —
     marginals only join on the ≤|langs| rows."""
-    from avocado_spark.queries import QUERIES
-
-    cm = QUERIES["langid_confusion"](spark, sf_dir)
+    cm = langid_confusion_q(spark, sf_dir)  # undecorated: keeps this job group
     tot = cm.agg(F.sum("n").cast("bigint").alias("nn"))
     diag = cm.agg(
         F.sum(
@@ -5156,11 +5154,8 @@ def ccnet_perplexity_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides global_rank's frozen-boundary two-phase (no single-partition
     window). Output: (lang, bucket) doc/bigram counts + the bucket's
     ppl_milli envelope."""
+    from avocado_spark.checkpoints import checkpoint, unpin
     from avocado_spark.operators import relational as R
-    from avocado_spark.operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     scores = TX.bigram_backoff_scores(docs, score_all=True)
@@ -5174,10 +5169,9 @@ def ccnet_perplexity_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins); its FOUR consumers (global_rank's count/boundary jobs +
     # rank/offset branches, and the per-lang totals) would each re-run
     # it — the RFM lesson. Checkpoint the doc-sized rollup once and
-    # release after the ≤(langs×3)-row cube materializes (warm sf0.1:
+    # unpin it after the ≤(langs×3)-row cube materializes (warm sf0.1:
     # 6.0 s un-checkpointed → 3.5 s).
-    owned: set[int] = set()
-    per_doc = _tracked_checkpoint(per_doc, owned)
+    per_doc = checkpoint(per_doc)
     ranked = R.global_rank(
         per_doc,
         [F.col("ppl_milli"), F.col("doc_id")],
@@ -5200,9 +5194,8 @@ def ccnet_perplexity_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ppl_milli").cast("bigint").alias("max_ppl_milli"),
         )
     )
-    residual: set[int] = set()
-    cube = _tracked_checkpoint(cube, residual)
-    _release_rdds(cube, owned)
+    cube = checkpoint(cube)
+    unpin(per_doc)
     return cube
 
 

@@ -23,6 +23,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def job_group(spark, request):
+    """A job group of this test's own on the driver thread, so
+    ``checkpoints.pinned`` / ``release`` see only what this test pins."""
+    group = f"test:{request.node.name}"
+    spark.sparkContext.setJobGroup(group, group)
+    return group
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -242,10 +242,11 @@ def test_bfs_hops_multi_source_takes_nearest(spark):
     assert got == {0: 0, 4: 0, 1: 1, 3: 1, 2: 2}
 
 
-def test_bfs_hops_early_stop_and_release(spark):
+def test_bfs_hops_early_stop_and_release(spark, job_group):
     """An exhausted frontier must end the loop early, and no checkpoint
-    blocks may outlive the call beyond the reported residual."""
-    from avocado_spark.operators.components import bfs_hops, release_result
+    blocks may outlive the call beyond what the job group owns."""
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import bfs_hops
 
     def _ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -259,8 +260,8 @@ def test_bfs_hops_early_stop_and_release(spark):
     assert got == {0: 0, 1: 1}  # component {2,3} unreached
     assert stats["rounds"] < 10, "empty frontier should short-circuit"
     leaked = _ids() - before
-    assert leaked == stats["residual_rdd_ids"]
-    release_result(spark, stats["residual_rdd_ids"])
+    assert leaked and leaked == pinned(spark)
+    release(spark)
     assert _ids() - before == set()
 
 

@@ -136,75 +136,73 @@ def _live_rdd_ids(spark) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def test_triangle_counts_releases_all_blocks(spark):
+def test_triangle_counts_releases_all_blocks(spark, job_group):
     """r7 verdict #2: triangle_counts must not pin edge blocks for the
-    session lifetime — after the call, only the reported residual
-    (the small counts table) survives, and release_result frees it."""
-    from avocado_spark.operators.components import release_result, triangle_counts
+    session lifetime — after the call, only what the job group still
+    owns (the small counts table) survives, and release frees it."""
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import triangle_counts
 
     spark.catalog.clearCache()
     before = _live_rdd_ids(spark)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4)], ["u", "v"]
     )
-    stats: dict = {}
-    out = triangle_counts(edges, stats=stats)
+    out = triangle_counts(edges)
     got = {r.node: r.n_triangles for r in out.collect()}
     assert got == {1: 1, 2: 2, 3: 2, 4: 1}
     leaked = _live_rdd_ids(spark) - before
-    assert leaked == stats["residual_rdd_ids"], (
-        f"blocks pinned beyond the reported residual: {leaked}"
+    assert leaked and leaked == pinned(spark), (
+        f"blocks pinned beyond what the job group owns: {leaked}"
     )
-    release_result(spark, stats["residual_rdd_ids"])
+    release(spark)
     assert _live_rdd_ids(spark) - before == set()
 
 
-def test_connected_components_residual_is_releasable(spark):
-    from avocado_spark.operators.components import (
-        connected_components,
-        release_result,
-    )
+def test_connected_components_residual_is_releasable(spark, job_group):
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import connected_components
 
     spark.catalog.clearCache()
     before = _live_rdd_ids(spark)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20)], ["a_id", "b_id"]
     )
-    stats: dict = {}
-    cc = connected_components(pairs, stats=stats)
+    cc = connected_components(pairs)
     got = {r.node: r.component for r in cc.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     leaked = _live_rdd_ids(spark) - before
-    assert leaked == stats["residual_rdd_ids"]
-    release_result(spark, stats["residual_rdd_ids"])
+    assert leaked and leaked == pinned(spark)
+    release(spark)
     assert _live_rdd_ids(spark) - before == set()
 
 
-def test_label_propagation_two_cliques(spark):
+def test_label_propagation_two_cliques(spark, job_group):
     """Two 4-cliques joined by one bridge edge: LPA must settle each
     clique on its minimum id, and the bridge must not merge them."""
-    from avocado_spark.operators.components import label_propagation, release_result
+    from avocado_spark.checkpoints import release
+    from avocado_spark.operators.components import label_propagation
 
     clique = lambda base: [(base + i, base + j) for i in range(4) for j in range(i + 1, 4)]  # noqa: E731
     edges = spark.createDataFrame(clique(0) + clique(10) + [(3, 10)], ["u", "v"])
-    stats: dict = {}
-    got = {r.node: r.community for r in label_propagation(edges, n_rounds=3, stats=stats).collect()}
+    got = {r.node: r.community for r in label_propagation(edges, n_rounds=3).collect()}
     assert {got[i] for i in range(4)} == {0}
     assert {got[i] for i in range(10, 14)} == {10}
-    release_result(spark, stats["residual_rdd_ids"])
+    release(spark)
 
 
-def test_label_propagation_releases_blocks(spark):
-    from avocado_spark.operators.components import label_propagation, release_result
+def test_label_propagation_releases_blocks(spark, job_group):
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import label_propagation
 
     spark.catalog.clearCache()
     before = _live_rdd_ids(spark)
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], ["u", "v"])
-    stats: dict = {}
-    out = label_propagation(edges, n_rounds=2, stats=stats)
+    out = label_propagation(edges, n_rounds=2)
     out.collect()
-    assert _live_rdd_ids(spark) - before == stats["residual_rdd_ids"]
-    release_result(spark, stats["residual_rdd_ids"])
+    leaked = _live_rdd_ids(spark) - before
+    assert leaked and leaked == pinned(spark)
+    release(spark)
     assert _live_rdd_ids(spark) - before == set()
 
 
@@ -256,26 +254,24 @@ def test_neighborhood_agg_star_two_rounds(spark):
     assert r2 == {0: 10, 1: 30, 2: 30, 3: 30}
 
 
-def test_ktruss_and_nagg_release_blocks(spark):
+def test_ktruss_and_nagg_release_blocks(spark, job_group):
     """Iterative-operator hygiene: after consuming the results and
-    releasing the reported residuals, no checkpoint blocks survive."""
-    from avocado_spark.operators.components import (
-        k_truss,
-        neighborhood_agg,
-        release_result,
-    )
+    releasing the job group, no checkpoint blocks survive."""
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import k_truss, neighborhood_agg
 
     before = _live_rdd_ids(spark)
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4), (2, 4), (1, 4)], ["u", "v"]
     )
     feats = spark.createDataFrame([(i, i * 10) for i in range(1, 5)], ["node", "h"])
-    st1: dict = {}
-    k_truss(edges, k=4, n_rounds=2, stats=st1).collect()
-    release_result(spark, st1["residual_rdd_ids"])
-    st2: dict = {}
-    neighborhood_agg(edges, feats, n_rounds=2, stats=st2).collect()
-    release_result(spark, st2["residual_rdd_ids"])
+    k_truss(edges, k=4, n_rounds=2).collect()
+    assert _live_rdd_ids(spark) - before == pinned(spark)
+    release(spark)
+    assert _live_rdd_ids(spark) - before == set()
+    neighborhood_agg(edges, feats, n_rounds=2).collect()
+    assert _live_rdd_ids(spark) - before == pinned(spark)
+    release(spark)
     assert _live_rdd_ids(spark) - before == set()
 
 
@@ -388,19 +384,15 @@ def test_harmonic_centrality_rejects_out_of_range_seed_bit(spark):
     assert {r["node"]: r["harmonic_milli"] for r in ok} == {1: 1000, 2: 500}
 
 
-def test_harmonic_centrality_releases_blocks(spark):
-    from avocado_spark.operators.components import (
-        harmonic_centrality,
-        release_result,
-    )
+def test_harmonic_centrality_releases_blocks(spark, job_group):
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import harmonic_centrality
 
     before = _live_rdd_ids(spark)
     edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["u", "v"])
-    st: dict = {}
-    harmonic_centrality(
-        edges, lambda c: F.when(c == 0, 0), n_rounds=4, stats=st
-    ).collect()
-    release_result(spark, st["residual_rdd_ids"])
+    harmonic_centrality(edges, lambda c: F.when(c == 0, 0), n_rounds=4).collect()
+    assert _live_rdd_ids(spark) - before == pinned(spark)
+    release(spark)
     assert _live_rdd_ids(spark) - before == set()
 
 
@@ -425,22 +417,21 @@ def test_weighted_sssp_relaxes_through_cheaper_path(spark):
     assert two == {0: 0, 1: 10, 2: 20}
 
 
-def test_weighted_sssp_multi_seed_min_and_release(spark):
+def test_weighted_sssp_multi_seed_min_and_release(spark, job_group):
     """Path 0-1-2-3 (unit weights), seeds {0, 3}: every node takes the
-    min over seeds; blocks fully released after release_result."""
-    from avocado_spark.operators.components import release_result, weighted_sssp
+    min over seeds; blocks fully released after release."""
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import weighted_sssp
 
     before = _live_rdd_ids(spark)
     edges = spark.createDataFrame(
         [(0, 1, 1), (1, 2, 1), (2, 3, 1)], ["u", "v", "w"]
     )
-    st: dict = {}
     out = {
         r["node"]: r["dist"]
-        for r in weighted_sssp(
-            edges, lambda c: (c == 0) | (c == 3), n_rounds=3, stats=st
-        ).collect()
+        for r in weighted_sssp(edges, lambda c: (c == 0) | (c == 3), n_rounds=3).collect()
     }
     assert out == {0: 0, 1: 1, 2: 1, 3: 0}
-    release_result(spark, st["residual_rdd_ids"])
+    assert _live_rdd_ids(spark) - before == pinned(spark)
+    release(spark)
     assert _live_rdd_ids(spark) - before == set()

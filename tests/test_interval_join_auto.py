@@ -71,7 +71,7 @@ def test_interval_join_left_outer_backfill(spark):
         [("chr1", 15, 25, "a"), ("chr2", 0, 7, "b")],
         "contig string, start long, end long, tag string",
     )
-    for strategy in ("broadcast", "binned", "nlj"):
+    for strategy in ("broadcast", "binned"):
         out = interval_join(left, right, strategy=strategy, how="left")
         rows = {(r.l_contig, r.l_start, r.r_tag) for r in out.collect()}
         assert rows == {
@@ -98,32 +98,6 @@ def test_interval_join_left_outer_null_payload_no_duplicate(spark):
     out = interval_join(left, right, strategy="binned", how="left")
     rows = [(r.l_start, r.l_note, r.r_tag) for r in out.collect()]
     assert sorted(rows, key=str) == [(10, None, "a"), (1000, "k", None)]
-
-
-def test_native_strategy_falls_back_to_binned_on_oss(spark):
-    """r7 stretch #9: OSS Spark ignores the range-join hint (the plan
-    degrades to BroadcastNestedLoopJoin), so strategy='native' must
-    detect the missing operator and route to the binned equi-join —
-    identical results, no nested loop in the plan."""
-    from avocado_spark.operators.interval_join import (
-        interval_join,
-        native_range_join_available,
-    )
-
-    assert native_range_join_available(spark) is False  # OSS 4.x runtime
-    left = spark.createDataFrame(
-        [("c1", 0, 100), ("c1", 500, 600)], ["contig", "start", "end"]
-    )
-    right = spark.createDataFrame(
-        [("c1", 50, 60), ("c1", 700, 800)], ["contig", "start", "end"]
-    )
-    out = interval_join(left, right, strategy="native")
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert out.count() == 1
-    got = interval_join(left, right, strategy="binned").count()
-    assert got == 1
 
 
 def test_group_right_count_mode_matches_collect(spark):

@@ -447,27 +447,25 @@ def test_ppjoin_no_nlj_broadcast_dfreq(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_triangles_no_cartesian_reuses_cached_edges(spark):
+def test_triangles_no_cartesian_reuses_cached_edges(spark, job_group):
     """Triangle counting: wedge build and close are equi joins; the
     edge table is materialized once (tracked localCheckpoint, r8 —
     the r7 session-lifetime persist is gone) and re-read as an
     ExistingRDD scan, not re-planned per reference. Inspected in the
     lazy form — the registry query materializes the final counts, so
     its returned plan is a bare result scan."""
+    from avocado_spark.checkpoints import release
     from avocado_spark.operators.components import coorder_edges, triangle_counts
     from avocado_spark.session import load_table
 
     li = load_table(spark, SF_SMOKE, "lineitem")
-    stats: dict = {}
-    df = triangle_counts(coorder_edges(li), stats=stats, materialize_result=False)
+    df = triangle_counts(coorder_edges(li), materialize_result=False)
     df.collect()
     plan = final_plan(df._jdf.queryExecution().executedPlan().toString())
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Scan ExistingRDD" in plan, plan
-    from avocado_spark.operators.components import release_result
-
-    release_result(spark, stats["residual_rdd_ids"])
+    release(spark)
 
 
 def test_scd2_single_key_shuffle(spark):
@@ -931,23 +929,6 @@ def test_trade_matrix_fact_scan_pruned(spark):
         s == {"l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate"}
         for s in li
     ), scans
-
-
-def test_registry_wide_no_cartesian_product(spark):
-    """Engine-wide invariant: NO query in the registry may plan a
-    CartesianProduct — the partitions×partitions shape that detonates
-    at any scale. (BroadcastNestedLoopJoin is NOT banned here: a
-    crossJoin against a broadcast 1-row aggregate compiles to a BNLJ
-    and is the house pattern for attaching scalar totals; the bounded
-    ones are guarded per-operator.) Builds every plan at smoke scale —
-    a few minutes, but it pins the whole surface."""
-    offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        df = fn(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            offenders[name] = True
-    assert not offenders, sorted(offenders)
 
 
 def test_shipping_priority_rides_take_ordered(spark):

@@ -410,9 +410,10 @@ def test_retrieval_metrics_hand_computed(spark):
     assert got[3]["n_retrieved_at_k"] == 0 and got[3]["recall_at_k"] == 0.0
 
 
-def test_bpe_apply_frozen_rules_matches_training_encoding(spark):
+def test_bpe_apply_frozen_rules_matches_training_encoding(spark, job_group):
     """bpe_apply with the trained rule list reproduces the training
     loop's own final encoding (train→freeze→apply is lossless)."""
+    from avocado_spark.checkpoints import release
     from avocado_spark.operators.text import bpe_apply, bpe_phrase_merges
 
     docs = spark.createDataFrame(
@@ -425,6 +426,4 @@ def test_bpe_apply_frozen_rules_matches_training_encoding(spark):
     trained = {(r.doc_id, r.pos): r.sym for r in enc["encoded"].collect()}
     applied = {(r.doc_id, r.pos): r.sym for r in bpe_apply(docs, merges).collect()}
     assert trained == applied
-    from avocado_spark.operators.components import release_result
-
-    release_result(spark, enc["residual_rdd_ids"])
+    release(spark)

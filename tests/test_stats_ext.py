@@ -351,10 +351,11 @@ def test_modularity_one_community_is_zero(spark):
     assert out["modularity"] == pytest.approx(0.0)
 
 
-def test_modularity_no_leaked_persists(spark):
-    """The tracked-checkpoint discipline: after the result materializes,
-    only the 1-row result block remains (released by release_result)."""
-    from avocado_spark.operators.components import release_result
+def test_modularity_no_leaked_persists(spark, job_group):
+    """The checkpoint discipline: after the result materializes, only
+    the 1-row result block remains, owned by the job group and freed by
+    release."""
+    from avocado_spark.checkpoints import pinned, release
 
     def _ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -363,12 +364,11 @@ def test_modularity_no_leaked_persists(spark):
     before = _ids()
     e = _edges(spark, [(1, 2), (2, 3)])
     lab = _df(spark, [(1, 1), (2, 1), (3, 1)], "node long, community long")
-    stats: dict = {}
-    out = modularity(e, lab, stats=stats)
+    out = modularity(e, lab)
     out.collect()
     leaked = _ids() - before
-    assert leaked == stats["residual_rdd_ids"]
-    release_result(spark, stats["residual_rdd_ids"])
+    assert len(leaked) == 1 and leaked == pinned(spark)
+    release(spark)
     assert _ids() - before == set()
 
 
@@ -419,11 +419,9 @@ def test_transitivity_wedge_free_graph(spark):
     assert row["trans_bp"] is None and row["mean_local_c_bp"] is None
 
 
-def test_clustering_releases_edge_blocks(spark):
-    from avocado_spark.operators.components import (
-        clustering_coefficients,
-        release_result,
-    )
+def test_clustering_releases_edge_blocks(spark, job_group):
+    from avocado_spark.checkpoints import pinned, release
+    from avocado_spark.operators.components import clustering_coefficients
 
     def _ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -431,11 +429,10 @@ def test_clustering_releases_edge_blocks(spark):
 
     before = _ids()
     e = _edges(spark, [(1, 2), (1, 3), (2, 3)])
-    stats: dict = {}
-    clustering_coefficients(e, stats=stats).collect()
+    clustering_coefficients(e).collect()
     leaked = _ids() - before
-    assert leaked == stats["residual_rdd_ids"]
-    release_result(spark, stats["residual_rdd_ids"])
+    assert leaked and leaked == pinned(spark)
+    release(spark)
     assert _ids() - before == set()
 
 
@@ -734,9 +731,7 @@ def test_cap_raise_releases_checkpoint_blocks(spark):
     """r13 (ADVICE): mann_kendall / seasonal_mann_kendall / theil_sen
     tracked-checkpoint their input BEFORE bounded_*_pairs enforces the
     max_points cap; the cap ValueError (or any downstream failure)
-    must unpersist those blocks on the way out — _tracked_checkpoint's
-    own docstring says GC never reclaims them."""
-    from avocado_spark.operators.components import _persistent_rdd_ids
+    must unpin those blocks on the way out — GC never reclaims them."""
     from avocado_spark.operators.stats import (
         mann_kendall,
         seasonal_mann_kendall,
@@ -744,14 +739,18 @@ def test_cap_raise_releases_checkpoint_blocks(spark):
 
     s = _df(spark, [(i, i) for i in range(10)], "t long, y long")
     g = _df(spark, [(0, i, i) for i in range(10)], "g long, t long, y long")
-    before = _persistent_rdd_ids(s)
+    def _ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    before = _ids()
     with pytest.raises(ValueError, match="> cap"):
         mann_kendall(s, "t", "y", max_points=5)
     with pytest.raises(ValueError, match="> cap"):
         theil_sen(s, "t", "y", max_points=5)
     with pytest.raises(ValueError, match="> cap"):
         seasonal_mann_kendall(g, "g", "t", "y", max_points=5)
-    assert _persistent_rdd_ids(s) == before
+    assert _ids() == before
 
 
 # ---------------------------------------------------------------- logreg
