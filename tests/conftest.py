@@ -32,6 +32,41 @@ def job_group(spark, request):
     return group
 
 
+def pinned_rdd_ids(spark) -> set[int]:
+    """Ids in Spark's persistent-RDD map. Compare these as id sets, not
+    sizes: the map holds its RDDs weakly, so a JVM GC may drop another
+    test's unreferenced RDD from it while a test runs."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+@pytest.fixture(scope="session")
+def registry_smoke_pass(spark):
+    """The one sf0.001 pass over the whole registry, shared by the smoke
+    test and the registry-wide CartesianProduct gate so the suite builds
+    the 300 plans once. Per query, in order: build, note whether it has
+    columns, note whether its own executedPlan() holds a
+    CartesianProduct (read before any action), run limit(5).collect(),
+    release its job group and note whether any id it pinned is left.
+    Returns the offending query names of each check."""
+    from avocado_spark.checkpoints import release
+    from avocado_spark.queries import get_queries
+
+    found = {"no_columns": [], "cartesian": [], "leaking": []}
+    for name, fn in sorted(get_queries().items()):
+        before = pinned_rdd_ids(spark)
+        df = fn(spark, SF_SMOKE)
+        if not df.columns:
+            found["no_columns"].append(name)
+        if "CartesianProduct" in df._jdf.queryExecution().executedPlan().toString():
+            found["cartesian"].append(name)
+        df.limit(5).collect()
+        release(spark, f"avocado:{name}")
+        if pinned_rdd_ids(spark) - before:
+            found["leaking"].append(name)
+    return found
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -9,51 +9,29 @@ import pytest
 
 from avocado_spark.checkpoints import release
 from avocado_spark.queries import get_oracles, get_queries
-from tests.conftest import SF_CORRECT, SF_SMOKE, assert_df_matches_oracle
+from tests.conftest import SF_CORRECT, assert_df_matches_oracle, pinned_rdd_ids
 
 QUERIES = get_queries()
 ORACLES = get_oracles()
 
 
-def _pinned_ids(spark) -> set[int]:
-    # compared as id sets, not sizes: Spark's persistent-RDD map holds
-    # its RDDs weakly, so a JVM GC may drop another test's unreferenced
-    # RDD from it while this test runs
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, duck, name):
-    before = _pinned_ids(spark)
+    before = pinned_rdd_ids(spark)
     sdf = QUERIES[name](spark, SF_CORRECT)
     assert_df_matches_oracle(sdf, duck, ORACLES[name])
     release(spark, f"avocado:{name}")
-    left = _pinned_ids(spark) - before
+    left = pinned_rdd_ids(spark) - before
     assert not left, f"{name} left RDDs {sorted(left)} pinned after release"
 
 
-def test_all_queries_run_smoke(spark):
+def test_all_queries_run_smoke(registry_smoke_pass):
     """Every registry query builds at smoke scale, returns columns and
-    runs; none plans a CartesianProduct (the partitions×partitions shape
-    that detonates at any scale; BroadcastNestedLoopJoin is NOT banned:
-    a crossJoin against a broadcast 1-row aggregate compiles to one and
-    is the house pattern for attaching scalar totals, the bounded ones
-    guarded per operator); and releasing its job group frees what it
-    pinned."""
-    cartesian, leaking = [], []
-    for name, fn in sorted(QUERIES.items()):
-        before = _pinned_ids(spark)
-        df = fn(spark, SF_SMOKE)
-        assert df.columns, name
-        if "CartesianProduct" in df._jdf.queryExecution().executedPlan().toString():
-            cartesian.append(name)
-        df.limit(5).collect()
-        release(spark, f"avocado:{name}")
-        if _pinned_ids(spark) - before:
-            leaking.append(name)
-    assert not cartesian, cartesian
-    assert not leaking, leaking
+    runs, and releasing its job group frees what it pinned. The same
+    pass carries the CartesianProduct gate
+    (test_plans.py::test_registry_wide_no_cartesian_product)."""
+    assert not registry_smoke_pass["no_columns"], registry_smoke_pass["no_columns"]
+    assert not registry_smoke_pass["leaking"], registry_smoke_pass["leaking"]
 
 
 def test_entry_contract(spark):

@@ -931,6 +931,18 @@ def test_trade_matrix_fact_scan_pruned(spark):
     ), scans
 
 
+def test_registry_wide_no_cartesian_product(registry_smoke_pass):
+    """Engine-wide invariant: NO query in the registry may plan a
+    CartesianProduct — the partitions×partitions shape that detonates
+    at any scale. (BroadcastNestedLoopJoin is NOT banned here: a
+    crossJoin against a broadcast 1-row aggregate compiles to a BNLJ
+    and is the house pattern for attaching scalar totals; the bounded
+    ones are guarded per-operator.) Read from the shared sf0.001
+    registry pass, which checks each query's own executedPlan() before
+    running it."""
+    assert not registry_smoke_pass["cartesian"], registry_smoke_pass["cartesian"]
+
+
 def test_shipping_priority_rides_take_ordered(spark):
     """Q3 shape: the top-10 must ride TakeOrderedAndProject (partial
     per-partition top-k + driver merge), never a global Sort of the
