@@ -25,7 +25,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from avocado_spark.checkpoints import persist
 from avocado_spark.operators import relational as R
 from avocado_spark.operators.discovery import discover_variants
 from avocado_spark.operators.genotyping import biallelic_pipeline
@@ -105,8 +107,16 @@ def jointer(
 ) -> DataFrame:
     """`jointer` (§3.2, avocado-cli/.../Jointer.scala:97-148): gVCF path
     = extract cohort variants (X8/X9/A4) → square-off (J3+J5) → joint
-    annotate/recall (A5-A7, E4, X14); plain path skips the square-off."""
+    annotate/recall (A5-A7, E4, X14); plain path skips the square-off.
+
+    The gVCF path reads ``genotypes`` twice, and pruning and pushdown
+    make the two copies differ, so Spark would run every per-sample
+    branch behind it twice per action. It persists ``genotypes`` instead
+    (lazily, as the reference caches here: Jointer.scala:143), owned by
+    the caller's job group: free it with ``checkpoints.release`` once
+    the result is consumed."""
     if from_gvcf:
+        genotypes = persist(genotypes, StorageLevel.MEMORY_AND_DISK_DESER)
         variants = extract_variants(genotypes)
         squared = square_off(variants, genotypes, strategy=join_strategy)
     else:

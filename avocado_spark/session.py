@@ -35,6 +35,12 @@ def get_spark(
       - Python workers fork from ``avocado_spark.worker_daemon`` (see its
         docstring), and the package root is on their PYTHONPATH, so they
         import the engine whatever the caller's cwd or PYTHONPATH.
+      - No Python call-site capture: with DataFrame debugging on, every
+        ``Column`` / ``F.*`` call first makes four py4j round trips to
+        record its call site for error messages. Errors keep their class
+        and JVM message without it.
+
+    A key in ``extra_conf`` overrides any default above.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -61,6 +67,7 @@ def get_spark(
         # result size so a runaway collect fails fast instead of OOMing.
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.python.daemon.module", "avocado_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     conf = dict(extra_conf or {})
     conf[WORKER_PYTHONPATH] = _with_package_root(conf.get(WORKER_PYTHONPATH))

@@ -237,6 +237,17 @@ _HEADLINE = [
 ]
 
 
+def _free_query(spark, name: str) -> None:
+    """Drop what query ``name`` left cached or pinned, once its result
+    is consumed: ``clearCache`` reaches persisted plans but not
+    ``localCheckpoint`` blocks, which stay pinned under the query's job
+    group until released."""
+    from avocado_spark.checkpoints import release
+
+    spark.catalog.clearCache()
+    release(spark, f"avocado:{name}")
+
+
 def _run_bench(spark, sf_dir: str, sf: float, headline) -> None:
     from avocado_spark.queries import get_queries
 
@@ -285,7 +296,7 @@ def _run_bench(spark, sf_dir: str, sf: float, headline) -> None:
                 errors[name] = f"{type(e).__name__}: {e}"[:500]
                 print(f"# {name}: ERROR {errors[name][:120]}", file=sys.stderr)
             finally:
-                spark.catalog.clearCache()
+                _free_query(spark, name)
     total = 0.0
     for name in names:
         if name in errors and name not in timings:
@@ -332,6 +343,8 @@ def _run_bench(spark, sf_dir: str, sf: float, headline) -> None:
         except Exception as e:  # noqa: BLE001 — diffing is best-effort
             plan_fp_match[name] = f"error: {e}"[:120]
             continue
+        finally:
+            _free_query(spark, name)
         match = fp == ref
         plan_fp_match[name] = match
         best = floor_q.get(name, {}).get("best")
@@ -646,7 +659,7 @@ def record_floor() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"# floor warm-up {name}: {e}"[:160], file=sys.stderr)
         finally:
-            spark.catalog.clearCache()
+            _free_query(spark, name)
             _shuffle_gc()
     samples: dict[str, list] = {n: [] for n in names}
     for _ in range(max(runs, 1)):
@@ -658,7 +671,7 @@ def record_floor() -> int:
             except Exception as e:  # noqa: BLE001
                 print(f"# floor {name}: ERROR {e}"[:160], file=sys.stderr)
             finally:
-                spark.catalog.clearCache()
+                _free_query(spark, name)
                 _shuffle_gc()
     floor: dict[str, dict] = {}
     for name in names:
@@ -670,6 +683,8 @@ def record_floor() -> int:
             entry["plan_fp"] = _plan_fingerprint(registry[name](spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             entry["plan_fp_error"] = f"{e}"[:160]
+        finally:
+            _free_query(spark, name)
         floor[name] = entry
         print(f"# floor {name}: best={entry['best']} runs={s}",
               file=sys.stderr)
@@ -1084,7 +1099,7 @@ def sf_scale_check() -> int:
         try:
             t0 = time.perf_counter()
             registry[warm_name](spark, d).count()
-            spark.catalog.clearCache()
+            _free_query(spark, warm_name)
             print(f"# warm-up {warm_name} on {d}: "
                   f"{time.perf_counter() - t0:.1f}s (untimed)", file=sys.stderr)
         except Exception as e:  # noqa: BLE001 — warm-up is best-effort
@@ -1118,7 +1133,7 @@ def sf_scale_check() -> int:
                 t0 = time.perf_counter()
                 registry[name](spark, d).count()
                 row[key] = round(time.perf_counter() - t0, 3)
-                spark.catalog.clearCache()
+                _free_query(spark, name)
             row["ratio"] = round(row["t10"] / max(row["t1"], 1e-3), 2)
             row["bound"] = bound
             row["ok"] = row["ratio"] <= bound
@@ -1289,7 +1304,7 @@ def sf_scale_check() -> int:
             print(f"# value-check {name} at {factor}x"
                   f" [{path or 'no-path'}]: {'OK' if ok else 'MISMATCH'}",
                   file=sys.stderr)
-            spark.catalog.clearCache()
+            _free_query(spark, name)
             # Release superseded SHUFFLE files, not just cached data:
             # by this phase the session has run 70+ scaled queries and
             # their shuffle files linger until the JVM's ContextCleaner

@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 
 from avocado_spark import queries_genomic  # noqa: F401  (registers derived SQL)
 from avocado_spark import tables
+from avocado_spark.checkpoints import pinned, release
 from avocado_spark.plans import pipelines as P
+from avocado_spark.queries import get_queries
 from tests.conftest import SF_SMOKE
 
 
@@ -64,7 +66,7 @@ def test_trio_genotyper_pipeline(spark, reads_hot):
             assert r["called_child_state"] == 3
 
 
-def test_jointer_pipeline(spark):
+def test_jointer_pipeline(spark, job_group):
     calls = tables.derived(spark, SF_SMOKE, "calls_rel").select(
         "contig", "start", "end", "ref_allele", "alt_allele", "sample_id",
         "gt_state", "ll0", "ll1", "ll2",
@@ -74,6 +76,47 @@ def test_jointer_pipeline(spark):
     out = P.jointer(calls, from_gvcf=True)
     assert out.count() > 0
     assert "recalled_state" in out.columns
+    # the cohort genotypes stay pinned under the caller's group until released
+    assert pinned(spark)
+    release(spark)
+    assert not pinned(spark)
+
+
+def _python_stages_run(spark, group: str) -> int:
+    """Stages of ``group``'s jobs that ran tasks and hold a
+    ``MapInPandas`` (a Python pass), read from Spark's status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+
+    def scopes(cluster):
+        yield cluster.name()
+        children = cluster.childClusters().iterator()
+        while children.hasNext():
+            yield from scopes(children.next())
+
+    n = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            stage = tracker.getStageInfo(sid)
+            if stage is None or stage.numCompletedTasks == 0:
+                continue  # skipped: its shuffle output was reused
+            graph = store.operationGraphForStage(sid)
+            n += "MapInPandas" in scopes(graph.rootCluster())
+    return n
+
+
+def test_jointer_runs_each_branch_once_per_action(spark, job_group):
+    """``jointer`` reads the cohort twice (extract_variants, square_off);
+    each per-sample event pass and the reference model's still run once
+    per action: three Python stages, not five."""
+    out = get_queries()["gvcf_jointer_e2e"](spark, SF_SMOKE)
+    spark.sparkContext.setJobGroup(job_group, job_group)
+    try:
+        assert out.collect()
+        assert _python_stages_run(spark, job_group) == 3
+    finally:
+        release(spark, "avocado:gvcf_jointer_e2e")
 
 
 def test_reassemble_pipeline(spark):

@@ -1,7 +1,8 @@
 """The engine's Python worker daemon (``avocado_spark.worker_daemon``):
 its zip-importer wrapper skips re-reading an unchanged archive but still
 sees a rewritten one, the session's workers run it, and the session puts
-the package root on the workers' PYTHONPATH."""
+the package root on the workers' PYTHONPATH. Also the session's other
+Python-side default: no DataFrame call-site capture."""
 
 from __future__ import annotations
 
@@ -9,8 +10,15 @@ import importlib.util
 import os
 import zipfile
 import zipimport
+from types import SimpleNamespace
+
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import SparkSession
 
 from avocado_spark import session, worker_daemon
+
+DF_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def _write_archive(path, modules: dict[str, str]) -> None:
@@ -70,6 +78,23 @@ def test_session_puts_package_root_on_worker_path(spark):
     assert session.PACKAGE_ROOT in conf.get(session.WORKER_PYTHONPATH).split(os.pathsep)
     assert conf.get("spark.python.daemon.module") == "avocado_spark.worker_daemon"
     assert os.path.isfile(os.path.join(session.PACKAGE_ROOT, "avocado_spark", "worker_daemon.py"))
+
+
+def test_session_skips_python_call_site_capture(spark, monkeypatch):
+    assert spark.conf.get(DF_DEBUGGING) == "false"
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        spark.range(1).select("no_such_column")
+
+    # the setting is static, so read what a new session would be built with
+    built = {}
+
+    def capture(builder):
+        built.update(builder._options)
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    session.get_spark(extra_conf={DF_DEBUGGING: "true"})
+    assert built[DF_DEBUGGING] == "true"
 
 
 def test_worker_path_merges_with_an_existing_value():
